@@ -1,55 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-
 import graft.core.GraftSession
-
-/** Per-query EXECUTOR metrics, attributed through job groups (Bench sets
-  * the query name as the group before each run): tasks report into the
-  * group their stage's job was started under, so attribution survives
-  * the listener bus's asynchrony — a late-arriving task end still lands
-  * on the right query. This is what makes a bench run self-describing
-  * against machine load: a query whose wall-clock is large but whose
-  * task run-time and GC share are small was waiting on the MACHINE, not
-  * the engine (the r05 driver run's 223 s vs 164 s controlled re-run was
-  * exactly this, and was diagnosable only by re-running).
-  */
-private class BenchMetrics extends SparkListener {
-  final class Acc {
-    val cpuNs = new AtomicLong
-    val runMs = new AtomicLong
-    val gcMs = new AtomicLong
-    val spillBytes = new AtomicLong
-    val tasks = new AtomicLong
-    val maxTaskMs = new AtomicLong
-  }
-  private val stageGroup = new ConcurrentHashMap[Integer, String]()
-  val byGroup = new ConcurrentHashMap[String, Acc]()
-
-  override def onJobStart(j: SparkListenerJobStart): Unit = {
-    val g = Option(j.properties)
-      .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      .getOrElse("_warmup")
-    j.stageInfos.foreach(si => stageGroup.put(si.stageId, g))
-  }
-
-  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-    val m = t.taskMetrics
-    if (m != null) {
-      val g = stageGroup.getOrDefault(t.stageId, "_warmup")
-      val a = byGroup.computeIfAbsent(g, _ => new Acc)
-      a.cpuNs.addAndGet(m.executorCpuTime)
-      a.runMs.addAndGet(m.executorRunTime)
-      a.gcMs.addAndGet(m.jvmGCTime)
-      a.spillBytes.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      a.tasks.incrementAndGet()
-      a.maxTaskMs.getAndUpdate(v => math.max(v, m.executorRunTime))
-    }
-  }
-}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Timing sinks each result into the `noop` v2 sink
@@ -77,7 +28,7 @@ object Bench {
       .config("spark.eventLog.dir", evDir.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new BenchMetrics
+    val metrics = new TaskMetricsListener
     spark.sparkContext.addSparkListener(metrics)
     // Neutral warmup: initialize codegen/shuffle/parquet machinery once so
     // the alphabetically-first query doesn't absorb session bring-up. No
@@ -165,16 +116,15 @@ object Bench {
     // async listener bus, so the tail queries' late task-end events are
     // all accounted — no sleep-and-hope race
     val qm = results.map { case (name, wall) =>
-      val a = Option(metrics.byGroup.get(name))
-      def g(f: BenchMetrics#Acc => Long): Long = a.map(f).getOrElse(0L)
+      val a = metrics.total(name)
       js(name) + ":" + List(
         s""""wall_sec":${r3(wall)}""",
-        s""""cpu_sec":${r3(g(_.cpuNs.get) / 1e9)}""",
-        s""""task_run_sec":${r3(g(_.runMs.get) / 1e3)}""",
-        s""""gc_sec":${r3(g(_.gcMs.get) / 1e3)}""",
-        s""""tasks":${g(_.tasks.get)}""",
-        s""""max_task_sec":${r3(g(_.maxTaskMs.get) / 1e3)}""",
-        s""""spill_bytes":${g(_.spillBytes.get)}""").mkString("{", ",", "}")
+        s""""cpu_sec":${r3(a.cpuNs / 1e9)}""",
+        s""""task_run_sec":${r3(a.runMs / 1e3)}""",
+        s""""gc_sec":${r3(a.gcMs / 1e3)}""",
+        s""""tasks":${a.tasks}""",
+        s""""max_task_sec":${r3(a.maxTaskMs / 1e3)}""",
+        s""""spill_bytes":${a.spillBytes}""").mkString("{", ",", "}")
     }.mkString("{", ",", "}")
     // whole-run health bands from the event log this run just wrote —
     // best-effort: an analyzer hiccup must not cost the bench artifact

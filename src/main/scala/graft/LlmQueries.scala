@@ -52,7 +52,7 @@ object LlmQueries {
     * a global sort's range exchange executes its un-materialized child
     * TWICE — once end-to-end to sample the range bounds, once to
     * shuffle — and for an opaque mapPartitions media kernel that means
-    * every PNG/WAV/AVI is encoded AND decoded twice (r22 StageProbe on
+    * every PNG/WAV/AVI is encoded AND decoded twice (r22 `Probe stages` on
     * m04: twin 32-task stages of 12.5 s and 13.6 s task-run over the
     * same 5000 rows, one writing no shuffle output = the sampling
     * pass). Materializing the kernel output once (eager local
@@ -61,7 +61,21 @@ object LlmQueries {
     * bytes are exactly what the sort must shuffle anyway, at any
     * scale. Queries whose sort input is already an aggregate don't
     * need this — the sampling pass there re-reads the agg's shuffle
-    * files, not the kernel. */
+    * files, not the kernel.
+    *
+    * The trade: `localCheckpoint` is NOT fault-tolerant. It cuts the
+    * lineage and keeps the blocks only in the executors' block
+    * managers, so a lost executor fails m02/m04/m05/m08/m09 instead of
+    * recomputing the lost partitions. It is kept because (a) in this
+    * engine's local mode the executor IS the driver JVM, so losing it
+    * loses the query anyway and lineage buys nothing; (b) the reliable
+    * alternatives cost more on every run: `persist` registers the frame
+    * with the session's CacheManager and needs an unpersist point the
+    * query cannot have (it returns the lazy sorted frame to its
+    * caller), and `checkpoint` writes every kernel output to a shared
+    * checkpoint dir and reads it back; (c) a failed query is re-run
+    * whole — it writes nothing, so a retry is safe. On a cluster with
+    * executor churn, swap it for a reliable `checkpoint`. */
   private def sortedOnce(df: DataFrame, keys: String*): DataFrame =
     df.localCheckpoint(true).orderBy(keys.map(col): _*)
 
@@ -120,10 +134,11 @@ object LlmQueries {
       .orderBy("doc_id")
 
   private def d13(s: SparkSession, dir: String): DataFrame =
-    // rolling-hash fingerprint via the native codegen'd expression
+    // rolling-hash fingerprint via the native codegen'd expression. No
+    // range exchange on the raw text (d04's pattern): this kernel is cheap
+    // enough that running it again for the sort's sampling pass costs
+    // less than shuffling the text (measured 0.21 -> 0.48 s at 32 cores)
     table(s, dir, "documents")
-      .repartitionByRange(s.sparkContext.defaultParallelism, col("doc_id"))
-      .sortWithinPartitions("doc_id")
       .select(col("doc_id"), rollingHash(col("text")).as("rh"))
       .orderBy("doc_id")
 
@@ -447,7 +462,7 @@ object LlmQueries {
     * operator; the composition is what a real pipeline ships, and
     * Catalyst fuses the stages into one DAG (no materialization between
     * them except the contamination stage's released caches). Exposed so
-    * ScaleProbe can drive the identical shapes at 1×/10×/100× corpus. */
+    * `Probe <sf> flagship` can drive the identical shapes at 1×/10×/100× corpus. */
   private[graft] def trainingManifest(docs: DataFrame): DataFrame = {
     val flagged = Dedup.crossSplitContamination(
       docs.filter(col("doc_id") % 10 === 0),

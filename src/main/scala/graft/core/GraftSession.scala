@@ -51,7 +51,7 @@ object GraftSession {
       // custom Catalyst surface (native expressions, e.g. graft_rolling_hash)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      // Per-commit committer tax (r14 CommitProbe: lifecycle-dense store
+      // Per-commit committer tax (r14 `Probe <sf> commit`: lifecycle-dense store
       // queries are bounded by the ~110 ms Spark-job floor of each tiny
       // write, not by manifest machinery). v2 commits task output
       // straight to the destination dir — atomic-visibility is NOT lost,

@@ -239,7 +239,7 @@ object Curation {
     * and the scoring join's probe side (the r21 window computed both in
     * one pass, but its term-partitioned WindowExec is the skew trap; the
     * stage keeps the tokenize/explode/agg subtree planned ONCE, which is
-    * what the window rewrite was for — r21 StageProbe: the duplicated
+    * what the window rewrite was for — r21 `Probe <sf> stages`: the duplicated
     * subtree was ~85% of the query's task time). df per term ≡ count of
     * tf rows with that term via groupBy(term).count joined back — the
     * identical integer, Zipf-safe (map-side partials collapse the hot

@@ -364,7 +364,7 @@ object IvfIndex {
     * compaction (the store's `rewriteDataFiles`, layout-preserving —
     * the table stays cell-partitioned). Every streamed append commits
     * one manifest entry PER TOUCHED CELL LEAF (up to batch-size
-    * entries per micro-batch — the ScaleProbe ivf ladder measures
+    * entries per micro-batch — the `Probe <sf> ivf` ladder measures
     * this), and probes walk entries driver-side, so an unfolded index
     * eventually pays O(appends × touched-leaves) planning per query.
     * Contents are moved, never changed: probe results, the replay
@@ -393,7 +393,7 @@ object IvfIndex {
     *     copy-on-write delete out of their old cell partitions plus an
     *     append into the new ones. Unmoved vectors' files are never
     *     rewritten, so the commit cost tracks the number of MOVED
-    *     vectors (ScaleProbe pins this), not the index size.
+    *     vectors (`Probe <sf> ivf` pins this), not the index size.
     *
     * Returns the number of vectors moved. The moved set is persisted
     * across its two consumers (the delete's key join and the append)

@@ -141,7 +141,7 @@ private[graft] object FooterHarvest {
       .map(f => f.name -> f.dataType).toMap
 
   /** Task count for the distributed harvest job: ≈8 footer opens per
-    * task past the parallelism floor. SHARED with CommitProbe's
+    * task past the parallelism floor. SHARED with `Probe <sf> stats`'s
     * latency-injected replica of the job (r21 ADVICE: a probe-local
     * copy of this formula would silently stop modeling the real job
     * shape if the production slicing changed). */

@@ -126,7 +126,7 @@ case class Snapshot(
   *  - readers get plain parquet scans (vectorized, filter-pushdown,
   *    partition-pruned by Catalyst via the Hive dir layout).
   *
-  * Manifest tree (MEASURED by `graft.ManifestProbe`, which grows a
+  * Manifest tree (MEASURED by `graft.Probe <sf> manifest`, which grows a
   * partitioned table to 10^5 entries through this public API):
   * snapshot metadata is two-level, like Iceberg's manifest list →
   * manifest files. The per-version JSON stores [[SegmentRef]]s into
@@ -862,7 +862,7 @@ class LakeTable(
     * job ([[FooterHarvest.distributed]]) instead of driver-side opens;
     * under it the driver path's latency-overlapped reads win (a Spark
     * job's launch floor would dominate a handful of footer opens —
-    * measured by `CommitProbe <sf> stats`, numbers at
+    * measured by `Probe <sf> stats`, numbers at
     * [[LakeTable.DefaultStatsDistMinFiles]]). 0 forces the distributed
     * path (spec seam); absent/unparseable = default. */
   private def statsDistMinFiles(props: Map[String, String]): Int =
@@ -3216,7 +3216,7 @@ object LakeTable {
     * and — the real point — keeps a 10³–10⁴-file backfill's harvest
     * off the driver entirely (Iceberg collects the same stats in its
     * writer tasks; the post-listing job is the Spark-native
-    * equivalent). Measured (`CommitProbe <sf> stats`, local[32],
+    * equivalent). Measured (`Probe <sf> stats`, local[32],
     * min-of-3): driver/distributed wall 0.12/0.19 s at 8 files,
     * 0.38/0.22 at 32, 0.68/0.16 at 64, 7.75/0.76 at 1024 — local
     * break-even ≈16 files, and local-FS opens (~ms) UNDERSTATE the

@@ -6,8 +6,8 @@ import java.util.concurrent.atomic.AtomicLong
 /** Opt-in phase accumulator for the table-store commit path.
   *
   * Disabled by default (one volatile read per call site — nothing on
-  * the hot path allocates or locks unless a probe main enables it);
-  * `graft.CommitProbe` flips it on to attribute lifecycle wall-clock to
+  * the hot path allocates or locks unless a probe enables it);
+  * `graft.Probe <sf> commit` and `stages` flip it on to attribute wall-clock to
   * the commit machinery's phases: the data-file Spark job, the
   * driver-side footer-stats harvest, bloom sidecar builds, segment
   * layout/fold, and snapshot serialization+claim. Phases NEST

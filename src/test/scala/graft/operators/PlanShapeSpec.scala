@@ -13,7 +13,7 @@ import graft.{SparkEntry, SparkSpec}
   * shows up as a red suite instead of a silent 100× slowdown. Each
   * check is an invariant of the plan SHAPE (pushdown reached the scan,
   * no cartesian candidate generation, no unnecessary shuffle), not a
-  * timing — timings live in Bench/ScaleProbe. */
+  * timing — timings live in Bench and `graft.Probe`. */
 class PlanShapeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"

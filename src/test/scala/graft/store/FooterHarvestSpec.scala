@@ -13,7 +13,7 @@ import graft.SparkSpec
   * distributed job ([[FooterHarvest.distributed]]), a huge threshold
   * forces the driver-local overlapped reads — same footers, same
   * stats, same pruning behavior. (Break-even measured by
-  * `CommitProbe <sf> stats`; at 100 TB the distributed shape is the
+  * `graft.Probe <sf> stats`; at 100 TB the distributed shape is the
   * point — zero driver-side footer opens for a 10³–10⁴-file
   * backfill.) */
 class FooterHarvestSpec extends SparkSpec {

@@ -12,7 +12,7 @@ import graft.SparkSpec
   * jobs of a clustered rewrite are submitted from RewriteEc threads,
   * and SparkContext job-group/description/pool are THREAD-LOCAL — so
   * without explicit propagation those jobs carry no group and a
-  * listener-based profiler (graft.Bench) books their task time under
+  * [[graft.TaskMetricsListener]] (Bench, Probe) books their task time under
   * "_warmup" instead of the running query. This spec pins the
   * propagation: every job started while the caller holds a job group —
   * pool-thread slices included — must report that group.
