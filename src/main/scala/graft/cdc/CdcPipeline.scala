@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.avro.AvroDecode
-import graft.core.TableNaming
+import graft.core.{BoundedCache, TableNaming}
 import graft.functions.Transforms
 import graft.ledger.Watermark
 import graft.maintenance.{Maintenance, ProcessedTableTracker}
@@ -25,27 +25,22 @@ class InMemorySchemaRegistry(schemas: Map[Int, String]) extends SchemaRegistry {
     schemas.getOrElse(id, throw new NoSuchElementException(s"schema id $id"))
 }
 
-/** Minimal Confluent-compatible HTTP client with an unbounded-safe LRU
-  * cache (schemas are immutable per id). */
-class HttpSchemaRegistry(baseUrl: String, cacheSize: Int = 256) extends SchemaRegistry {
-  private val cache =
-    new java.util.LinkedHashMap[Int, String](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[Int, String]): Boolean =
-        size() > cacheSize
-    }
+/** Minimal Confluent-compatible HTTP client with a bounded LRU cache
+  * (schemas are immutable per id). The request runs outside the cache
+  * lock, so one topic's slow lookup never stalls another topic's hit. */
+class HttpSchemaRegistry(baseUrl: String) extends SchemaRegistry {
+  private val cache = new BoundedCache[Int, String](256, _ => 1L)
 
   // one client for the registry's lifetime — HttpClient pools connections
   private val client = java.net.http.HttpClient.newHttpClient()
 
-  def getSchema(id: Int): String = cache.synchronized {
-    Option(cache.get(id)).getOrElse {
-      val uri = java.net.URI.create(s"$baseUrl/schemas/ids/$id")
-      val req = java.net.http.HttpRequest.newBuilder(uri).GET().build()
-      val body = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString()).body()
-      val schema = DebeziumSchema.parse(body).get("schema").asText()
-      cache.put(id, schema)
-      schema
-    }
+  def getSchema(id: Int): String = cache.getOrElseUpdate(id) {
+    val uri = java.net.URI.create(s"$baseUrl/schemas/ids/$id")
+    val req = java.net.http.HttpRequest.newBuilder(uri).GET().build()
+    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+    Option.when(resp.statusCode() == 200)(DebeziumSchema.parse(resp.body()).path("schema"))
+      .filter(_.isTextual).map(_.asText())
+      .getOrElse(throw new NoSuchElementException(s"schema id $id: HTTP ${resp.statusCode()}"))
   }
 }
 
@@ -125,9 +120,11 @@ object CdcPipeline {
       dedup.filter(col("__op") === "d").drop("__op")))
   }
 
-  /** MERGE the upserts, DELETE the deletes — staged through global temp
-    * views suffixed by table name to avoid cross-topic collision, like
-    * the reference's SQL path (`cdc_pipeline.py:211-251`).
+  /** MERGE the upserts, DELETE the deletes (`cdc_pipeline.py:211-251`).
+    * The reference stages both through global temp views; those are
+    * shared by every topic thread, so two same-named tables in different
+    * schemas would race on one view name — the frames go straight to
+    * the table instead.
     *
     * Each side is persisted around its apply: the decode → cast →
     * window-dedup lineage above it is otherwise re-evaluated up to three
@@ -135,32 +132,25 @@ object CdcPipeline {
     * and the rewrite join) — caching the micro-batch-sized result makes
     * those passes one Avro decode instead of three. */
   def applyCdcChanges(
-      spark: SparkSession,
       table: LakeTable,
-      viewSuffix: String,
       upserts: DataFrame,
       deletes: DataFrame): Unit = {
 
     val up = upserts.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       if (!up.isEmpty) {
-        val viewName = s"upsert_view_$viewSuffix"
-        up.createOrReplaceGlobalTempView(viewName)
         logger.info(s"Executing Merge Into for ${table.name}")
         // honors write.merge.mode: COW (default) or merge-on-read — the
         // reference's commented per-table switch (iceberg.py:78-84)
-        table.upsert(spark.table(s"global_temp.$viewName"), Seq("id_iceberg"))
+        table.upsert(up, Seq("id_iceberg"))
       }
     } finally up.unpersist(false)
 
     val del = deletes.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       if (!del.isEmpty) {
-        val viewName = s"delete_view_$viewSuffix"
-        del.createOrReplaceGlobalTempView(viewName)
         logger.info(s"Executing Delete for ${table.name}")
-        table.deleteMatching(
-          spark.table(s"global_temp.$viewName").select("id_iceberg"), Seq("id_iceberg"))
+        table.deleteMatching(del.select("id_iceberg"), Seq("id_iceberg"))
       }
     } finally del.unpersist(false)
   }
@@ -170,7 +160,6 @@ object CdcPipeline {
     * order (so the newest version's MERGE lands last and wins), apply,
     * track, and append the batch-stats watermark row. */
   def processBatch(batchDf: DataFrame, batchId: Long, ctx: PipelineContext): Unit = {
-    val spark = batchDf.sparkSession
     val startNs = System.nanoTime()
     val table = ctx.catalog.table(ctx.fullTableName)
 
@@ -191,39 +180,28 @@ object CdcPipeline {
     batchDf.persist(StorageLevel.MEMORY_AND_DISK)
     val stats =
       try {
-        val valueSchemaIds = batchDf.select("value_schema_id").distinct()
-          .collect().map(_.getInt(0))
-        val valueSchemaDict = valueSchemaIds
+        val idPairs = batchDf.select("value_schema_id", "key_schema_id").distinct()
+          .collect().map(r => (r.getInt(0), r.getInt(1)))
+        val schemaOf = idPairs.flatMap(p => Seq(p._1, p._2)).distinct
           .map(id => id -> ctx.schemaRegistry.getSchema(id)).toMap
-        val keySchemaIds = batchDf.select("key_schema_id").distinct()
-          .collect().map(_.getInt(0))
-        val keySchemaDict = keySchemaIds
-          .map(id => id -> ctx.schemaRegistry.getSchema(id)).toMap
+        // value id → its smallest paired key id, in ascending value-id
+        // order: old versions first, so the newest version's MERGE wins
+        val slices = idPairs.groupBy(_._1).view.mapValues(_.map(_._2).min)
+          .toSeq.sortBy(_._1)
 
-        logger.info(s"${ctx.topic} | Key Schema Ids: ${keySchemaIds.toSeq} | " +
-          s"Value Schema Ids: ${valueSchemaIds.toSeq}")
+        logger.info(s"${ctx.topic} | Key Schema Ids: ${idPairs.map(_._2).distinct.toSeq} | " +
+          s"Value Schema Ids: ${slices.map(_._1)}")
 
-        // ascending schema-id order: old versions first, newest MERGE wins
-        for ((valueSchemaId, valueSchemaStr) <- valueSchemaDict.toSeq.sortBy(_._1)) {
+        for ((valueSchemaId, keySchemaId) <- slices) {
           val schemaFiltered = batchDf.filter(col("value_schema_id") === valueSchemaId)
-          val debeziumSchema = DebeziumSchema.extract(valueSchemaStr)
-
-          val keyRows = schemaFiltered.select("key_schema_id").distinct().collect()
-          if (keyRows.nonEmpty) {
-            val keySchemaId = keyRows.head.getInt(0)
-            keySchemaDict.get(keySchemaId) match {
-              case None =>
-                logger.warn(s"Key schema not found for id $keySchemaId")
-              case Some(keySchemaStr) =>
-                val pkCols = DebeziumSchema.keyColumns(keySchemaStr)
-                transformAndDedup(schemaFiltered, keySchemaStr, valueSchemaStr,
-                  debeziumSchema, pkCols, table) match {
-                  case None => ()
-                  case Some((upserts, deletes)) =>
-                    applyCdcChanges(spark, table, ctx.icebergTable, upserts, deletes)
-                }
+          val valueSchemaStr = schemaOf(valueSchemaId)
+          val keySchemaStr = schemaOf(keySchemaId)
+          transformAndDedup(schemaFiltered, keySchemaStr, valueSchemaStr,
+            DebeziumSchema.extract(valueSchemaStr),
+            DebeziumSchema.keyColumns(keySchemaStr), table)
+            .foreach { case (upserts, deletes) =>
+              applyCdcChanges(table, upserts, deletes)
             }
-          }
         }
 
         ctx.tracker.foreach(_.mark(ctx.fullTableName))

@@ -340,33 +340,18 @@ object LshIndex {
     * disambiguates the rebuilt index from its predecessor. Entries are
     * a few dozen bytes each, but the map still LRU-evicts past a
     * generous cap so a long-lived session over many rebuilt indexes
-    * cannot grow it unboundedly. */
-  private val TinyCacheMaxEntries = 8192
+    * cannot grow it unboundedly.
+    *
+    * A bounded LRU (evicting one eldest entry past the cap) instead of
+    * a wipe-everything reset — a full clear would force every active
+    * stream to re-probe its tables' sizes on the next batch. The size
+    * probe (fs listings) runs OUTSIDE the lock, per the
+    * [[graft.core.BoundedCache]] load rule; two racing probes of the
+    * same key both compute and one wins — the verdict is a pure
+    * function of the immutable (snapshot, cap) key, so the race is
+    * benign. */
   private val tinyCache =
-    new java.util.LinkedHashMap[(String, Long, String, Long), java.lang.Boolean](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, String, Long), java.lang.Boolean])
-          : Boolean = size() > TinyCacheMaxEntries
-    }
-
-  /** Cache-through tiny-index verdict: a bounded LRU (evicting one
-    * eldest entry past the cap) instead of a wipe-everything reset —
-    * a full clear would force every active stream to re-probe its
-    * tables' sizes on the next batch. The size probe (fs listings)
-    * runs OUTSIDE the lock, like [[graft.store.LakeTable.cachedBloom]];
-    * two racing probes of the same key both compute and one wins — the
-    * verdict is a pure function of the immutable (snapshot, cap) key,
-    * so the race is benign. */
-  private def tinyCached(key: (String, Long, String, Long))(
-      compute: => Boolean): Boolean =
-    tinyCache.synchronized(Option(tinyCache.get(key))) match {
-      case Some(v) => v.booleanValue()
-      case None =>
-        val v = compute
-        tinyCache.synchronized(tinyCache.put(key, java.lang.Boolean.valueOf(v)))
-        v
-    }
+    new graft.core.BoundedCache[(String, Long, String, Long), Boolean](8192, _ => 1L)
 
   private def tinyIndex(
       bandsT: graft.store.LakeTable, toksT: graft.store.LakeTable): Boolean = {
@@ -376,7 +361,7 @@ object LshIndex {
     }
     cap > 0L && Seq(bandsT, toksT).forall(t => t.currentSnapshot.exists(s =>
       s.entries.size <= TinyProbeMaxEntries &&
-        tinyCached(
+        tinyCache.getOrElseUpdate(
           (t.location, s.version, s.entries.headOption.fold("-")(_.dir), cap))(
           t.dataUnder(s, cap))))
   }

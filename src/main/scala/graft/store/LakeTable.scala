@@ -220,13 +220,11 @@ class LakeTable(
   /** Cache-through read of one immutable segment file. */
   private def loadSegment(ref: SegmentRef): Seq[ManifestEntry] = {
     val p = new Path(manifestsDir, ref.file)
-    segmentCacheGet(p.toString).getOrElse {
+    segmentCache.getOrElseUpdate(p.toString) {
       val in = fs.open(p)
       val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      val es = Mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
+      Mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
         .elements().asScala.map(parseEntry).toSeq
-      segmentCachePut(p.toString, es)
-      es
     }
   }
 
@@ -241,7 +239,7 @@ class LakeTable(
     val p = new Path(manifestsDir, file)
     val out = fs.create(p, false)
     try out.write(Mapper.writeValueAsBytes(arr)) finally out.close()
-    segmentCachePut(p.toString, entries)
+    segmentCache.put(p.toString, entries)
     SegmentRef(file, entries.size)
   }
 
@@ -1111,7 +1109,7 @@ class LakeTable(
     implicit val ec: ExecutionContext = ExecutionContext.global
     val loaded = Await.result(
       Future.traverse(needed)(p =>
-        Future(p -> LakeTable.cachedBloom(p)(loadBloom(p)))), Duration.Inf).toMap
+        Future(p -> LakeTable.bloomCache.getOrLoad(p)(loadBloom(p)))), Duration.Inf).toMap
     entries.filter { e =>
       cands.forall { case (c, keys) =>
         !e.blooms.contains(c) ||
@@ -1938,7 +1936,7 @@ class LakeTable(
     def bloomDisjointUncached(e: ManifestEntry, d: ManifestEntry,
         cols: Seq[String]): Boolean = {
       // LOAD FAILURES THROW through the verdict cache (so nothing
-      // sticks — the cachedBloom loud-re-probe rule) and the caller
+      // sticks — the BoundedCache loud-re-load rule) and the caller
       // degrades to "maskable" for THIS pass only: both the delete-key
       // collect and a sidecar the entry CLAIMS (k ∈ e.blooms) that
       // fails to read are transient "proof unavailable", not computed
@@ -1946,11 +1944,11 @@ class LakeTable(
       // the anti-join on every read) until LRU eviction even after the
       // file becomes readable again. Cap-overflow / null-key verdicts
       // ARE real computations over a write-once file and do cache.
-      val vals = LakeTable.cachedDeleteKeys(s"$location/data/${d.dir}")(
+      val vals = LakeTable.deleteKeyCache.getOrElseUpdate(s"$location/data/${d.dir}")(
         loadDeleteKeyVals(d, bloomable))
       cols.exists(k => vals.getOrElse(k, None).exists { vs =>
         val p = bloomPath(e, k).toString
-        val bf = LakeTable.cachedBloom(p)(loadBloom(p)).getOrElse(
+        val bf = LakeTable.bloomCache.getOrLoad(p)(loadBloom(p)).getOrElse(
           throw new java.io.IOException(s"bloom sidecar unreadable: $p"))
         vs.forall(v => !BloomSkipping.mightContain(bf, v))
       })
@@ -1963,9 +1961,9 @@ class LakeTable(
       // delete key absent — up to the cap × columns probes per pair —
       // and a hot MoR table plans splitByDeleteReach on EVERY read
       cols.nonEmpty && {
-        try LakeTable.cachedReachVerdict(
+        try LakeTable.reachVerdictCache.getOrElseUpdate((
           s"$location/blooms/${e.dir}/${e.partition.getOrElse("")}",
-          s"$location/data/${d.dir}", cols.mkString(","))(
+          s"$location/data/${d.dir}", cols.mkString(",")))(
           bloomDisjointUncached(e, d, cols))
         catch { case scala.util.control.NonFatal(_) => false }
       }
@@ -3259,41 +3257,14 @@ object LakeTable {
     * budgeted eviction (access order): a long-running stream probes
     * its index every micro-batch, and re-reading each surviving
     * entry's sidecar from the FS per probe would make read planning
-    * IO-bound at exactly the entry counts where pruning matters. */
-  private val BloomCacheBudgetBytes = 256L << 20
-  private val bloomCache = new java.util.LinkedHashMap[
-    String, (org.apache.spark.util.sketch.BloomFilter, Long)](64, 0.75f, true)
-  private var bloomCacheBytes = 0L
-
-  private def bloomCacheGet(path: String): Option[org.apache.spark.util.sketch.BloomFilter] =
-    bloomCache.synchronized(Option(bloomCache.get(path)).map(_._1))
-
-  private def bloomCachePut(path: String, bf: org.apache.spark.util.sketch.BloomFilter): Unit =
-    bloomCache.synchronized {
-      if (!bloomCache.containsKey(path)) {
-        val sz = math.max(64L, bf.bitSize() / 8)
-        bloomCache.put(path, (bf, sz))
-        bloomCacheBytes += sz
-        val it = bloomCache.entrySet().iterator()
-        while (bloomCacheBytes > BloomCacheBudgetBytes && it.hasNext) {
-          bloomCacheBytes -= it.next().getValue._2
-          it.remove()
-        }
-      }
-    }
-
-  /** Cache-through sidecar load: IO runs OUTSIDE the lock (concurrent
-    * probes load distinct paths in parallel); a miss (unreadable or
-    * absent sidecar) is never cached — it must stay a loud re-probe,
-    * not a sticky verdict. */
-  private[store] def cachedBloom(path: String)(
-      load: => Option[org.apache.spark.util.sketch.BloomFilter])
-      : Option[org.apache.spark.util.sketch.BloomFilter] =
-    bloomCacheGet(path).orElse {
-      val bf = load
-      bf.foreach(bloomCachePut(path, _))
-      bf
-    }
+    * IO-bound at exactly the entry counts where pruning matters.
+    * Loaded through `getOrLoad`, IO outside the lock (concurrent probes
+    * load distinct paths in parallel); a miss (unreadable or absent
+    * sidecar) is never cached — it must stay a loud re-probe, not a
+    * sticky verdict. */
+  private val bloomCache =
+    new graft.core.BoundedCache[String, org.apache.spark.util.sketch.BloomFilter](
+      256L << 20, bf => math.max(64L, bf.bitSize() / 8))
 
   /** Distinct-tuple cap per equality-delete file for the delete-reach
     * bloom refinement: above it the file's keys prove nothing (the
@@ -3304,30 +3275,13 @@ object LakeTable {
   /** Normalized key values of equality-delete files, keyed by absolute
     * data path — safe because delete files are write-once. Bounded LRU
     * by file count; each value is itself bounded by
-    * [[MaxDeleteReachKeys]]. Loaded through [[cachedDeleteKeys]] so a
+    * [[MaxDeleteReachKeys]]. Loaded cache-through by `deleteReach` so a
     * MoR read plans each outstanding delete's collect job once per JVM,
-    * not once per query. */
-  private val DeleteKeyCacheMaxFiles = 256
-  private val deleteKeyCache = new java.util.LinkedHashMap[
-    String, Map[String, Option[IndexedSeq[BloomSkipping.Key]]]](16, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[String, Map[String, Option[IndexedSeq[BloomSkipping.Key]]]])
-        : Boolean = size() > DeleteKeyCacheMaxFiles
-  }
-
-  /** Cache-through delete-key load; the collect runs OUTSIDE the lock
-    * (it is a Spark job), and racing loads of the same write-once file
-    * both compute the same value — benign. */
-  private[store] def cachedDeleteKeys(path: String)(
-      load: => Map[String, Option[IndexedSeq[BloomSkipping.Key]]])
-      : Map[String, Option[IndexedSeq[BloomSkipping.Key]]] =
-    deleteKeyCache.synchronized(Option(deleteKeyCache.get(path))) match {
-      case Some(v) => v
-      case None =>
-        val v = load
-        deleteKeyCache.synchronized(deleteKeyCache.put(path, v))
-        v
-    }
+    * not once per query; the collect (a Spark job) runs outside the
+    * lock, and racing loads of the same write-once file both compute
+    * the same value — benign. */
+  private val deleteKeyCache = new graft.core.BoundedCache[
+    String, Map[String, Option[IndexedSeq[BloomSkipping.Key]]]](256, _ => 1L)
 
   /** Delete-reach bloom VERDICTS, keyed by (entry sidecar dir, delete
     * data path, probed columns) — all three name write-once content, so
@@ -3337,27 +3291,8 @@ object LakeTable {
     * Booleans — a generous entry cap costs nothing. A compute that
     * throws (delete-key OR sidecar load failure — both transient
     * "proof unavailable", not verdicts) caches nothing. */
-  private val ReachVerdictCacheMaxEntries = 1 << 16
-  private val reachVerdictCache = new java.util.LinkedHashMap[
-    (String, String, String), java.lang.Boolean](64, 0.75f, true) {
-    override def removeEldestEntry(
-        e: java.util.Map.Entry[(String, String, String), java.lang.Boolean])
-        : Boolean = size() > ReachVerdictCacheMaxEntries
-  }
-
-  private[store] def cachedReachVerdict(
-      entrySidecarDir: String, deletePath: String, cols: String)(
-      compute: => Boolean): Boolean = {
-    val key = (entrySidecarDir, deletePath, cols)
-    reachVerdictCache.synchronized(Option(reachVerdictCache.get(key))) match {
-      case Some(v) => v.booleanValue()
-      case None =>
-        val v = compute
-        reachVerdictCache.synchronized(
-          reachVerdictCache.put(key, java.lang.Boolean.valueOf(v)))
-        v
-    }
-  }
+  private val reachVerdictCache =
+    new graft.core.BoundedCache[(String, String, String), Boolean](1 << 16, _ => 1L)
 
   /** Superseded `tags-v<n>.json` generations kept on each successful
     * claim. Sized so a reader's bounded re-list retries cannot be
@@ -3387,24 +3322,8 @@ object LakeTable {
   // Immutable-segment content cache (the manifest cache every Iceberg
   // runtime keeps): keyed by absolute file path — safe because segment
   // files are write-once — bounded by total cached entries, LRU.
-  private val SegmentCacheMaxEntries = 500000
-  private val segmentCacheMap =
-    new java.util.LinkedHashMap[String, Seq[ManifestEntry]](64, 0.75f, true)
-  private var segmentCacheCount = 0L
-  private def segmentCacheGet(k: String): Option[Seq[ManifestEntry]] =
-    segmentCacheMap.synchronized(Option(segmentCacheMap.get(k)))
-  private def segmentCachePut(k: String, v: Seq[ManifestEntry]): Unit =
-    segmentCacheMap.synchronized {
-      if (!segmentCacheMap.containsKey(k)) {
-        segmentCacheMap.put(k, v)
-        segmentCacheCount += v.size
-        val it = segmentCacheMap.entrySet().iterator()
-        while (segmentCacheCount > SegmentCacheMaxEntries && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != k) { segmentCacheCount -= e.getValue.size; it.remove() }
-        }
-      }
-    }
+  private val segmentCache =
+    new graft.core.BoundedCache[String, Seq[ManifestEntry]](500000, _.size.toLong)
 
   /** Bounded pool for concurrent per-slice rewrite jobs (daemon threads
     * so an abandoned session still exits). */

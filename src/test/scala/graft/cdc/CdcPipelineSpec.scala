@@ -17,6 +17,7 @@ import graft.functions.Transforms
 import graft.ledger.Watermark
 import graft.maintenance.ProcessedTableTracker
 import graft.store.LakeCatalog
+import graft.streaming.StreamRunner
 
 /** End-to-end CDC micro-batch processing against the LakeTable store:
   * Avro envelopes (with Confluent framing in the streaming tests) →
@@ -95,10 +96,9 @@ class CdcPipelineSpec extends SparkSpec {
 
   // --- target table bootstrap (the JDBC-batch RTAS path) --------------
 
-  private def bootstrap(): (LakeCatalog, PipelineContext) = {
+  private def bootstrap(dbs: Seq[String] = Seq("store")): (LakeCatalog, PipelineContext) = {
     val cat = new LakeCatalog(spark, Files.createTempDirectory("cdc-e2e").toString)
     Watermark.ensureWatermarkTables(cat)
-    cat.createDatabase("svc_store")
     import spark.implicits._
     val base = Seq(
       (1, "a", 10.0, new Timestamp(1600000000000L)),
@@ -107,13 +107,17 @@ class CdcPipelineSpec extends SparkSpec {
       .toDF("id", "name", "amount", "DT")
     val withMeta = Transforms.withPkHash(
       Transforms.withAuditColumn(Transforms.trimStringColumns(base)), Seq("id"))
-    cat.table("svc_store.tb_item").createOrReplace(withMeta)
+    dbs.foreach { db =>
+      cat.createDatabase(s"svc_$db")
+      cat.table(s"svc_$db.tb_item").createOrReplace(withMeta)
+    }
     val ctx = PipelineContext(cat, registry, "dbz.store.TB_ITEM", "dag1", "svc")
     (cat, ctx)
   }
 
-  private def state(cat: LakeCatalog): Seq[(Int, String, Double)] =
-    cat.table("svc_store.tb_item").read
+  private def state(
+      cat: LakeCatalog, table: String = "svc_store.tb_item"): Seq[(Int, String, Double)] =
+    cat.table(table).read
       .select("id", "name", "amount").orderBy("id")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getDouble(2))).toSeq
 
@@ -242,6 +246,49 @@ class CdcPipelineSpec extends SparkSpec {
     state(cat).find(_._1 == 2).get._2 shouldBe "streamed"
   }
 
+  /** A random CDC workload over keys 1–12 (ops in offset order); names
+    * carry `tag` so rows from another workload are recognizable. */
+  private def randomOps(
+      rnd: scala.util.Random, tag: String): Seq[(Int, String, String, Double, Long)] = {
+    val keys = 1 to 12
+    (1 to 60).map { i =>
+      val key = keys(rnd.nextInt(keys.length))
+      val op = rnd.nextInt(5) match {
+        case 0 => "d"
+        case 1 => "c"
+        case _ => "u"
+      }
+      (key, op, s"$tag-v$i", rnd.nextInt(1000).toDouble, 1000L + i)
+    }
+  }
+
+  private def opsBatch(chunk: Seq[(Int, String, String, Double, Long)]): DataFrame =
+    batchDf(chunk.map { case (k, op, name, amount, off) =>
+      (1, 2, keyBytes(k),
+        valueBytes(op, k, name, amount, 1600000000000L, 1700000000000L + off),
+        off)
+    })
+
+  /** Replay oracle: the last op per key decides presence and values;
+    * untouched keys keep the bootstrap seed. */
+  private def replayOracle(
+      ops: Seq[(Int, String, String, Double, Long)]): Seq[(Int, String, Double)] = {
+    val lastPerKey = ops.groupBy(_._1).view.mapValues(_.maxBy(_._5)).toMap
+    (
+      Seq(1, 2, 3).filterNot(k =>
+        lastPerKey.get(k).exists(_._2 == "d")).map { k =>
+        lastPerKey.get(k) match {
+          case Some((_, _, name, amount, _)) => (k, name, amount)
+          case None => (k, Seq("", "a", "b", "c")(k), k * 10.0) // untouched seed
+        }
+      } ++
+        lastPerKey.collect {
+          case (k, (_, op, name, amount, _)) if k > 3 && op != "d" =>
+            (k, name, amount)
+        }
+    ).sortBy(_._1)
+  }
+
   test("property: batched processBatch converges to the replay oracle") {
     // Random CDC workload split across micro-batches must reach exactly
     // the state of a single latest-op-per-key replay — the idempotent-
@@ -249,42 +296,36 @@ class CdcPipelineSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 3) {
       val (cat, ctx) = bootstrap()
-      val keys = 1 to 12
-      val ops = (1 to 60).map { i =>
-        val key = keys(rnd.nextInt(keys.length))
-        val op = rnd.nextInt(5) match {
-          case 0 => "d"
-          case 1 => "c"
-          case _ => "u"
-        }
-        (key, op, s"t$trial-v$i", rnd.nextInt(1000).toDouble, 1000L + i)
-      }
+      val ops = randomOps(rnd, s"t$trial")
       // 3 micro-batches in offset order (Kafka delivery order per key)
       ops.grouped(20).zipWithIndex.foreach { case (chunk, bi) =>
-        val batch = batchDf(chunk.map { case (k, op, name, amount, off) =>
-          (1, 2, keyBytes(k),
-            valueBytes(op, k, name, amount, 1600000000000L, 1700000000000L + off),
-            off)
-        })
-        CdcPipeline.processBatch(batch, bi.toLong, ctx)
+        CdcPipeline.processBatch(opsBatch(chunk), bi.toLong, ctx)
       }
-      // replay oracle: last op per key decides presence and values
-      val lastPerKey = ops.groupBy(_._1).view.mapValues(_.maxBy(_._5)).toMap
-      val expected = (
-        Seq(1, 2, 3).filterNot(k =>
-          lastPerKey.get(k).exists(_._2 == "d")).map { k =>
-          lastPerKey.get(k) match {
-            case Some((_, _, name, amount, _)) => (k, name, amount)
-            case None => (k, Seq("", "a", "b", "c")(k), k * 10.0) // untouched seed
-          }
-        } ++
-          lastPerKey.collect {
-            case (k, (_, op, name, amount, _)) if k > 3 && op != "d" =>
-              (k, name, amount)
-          }
-      ).sortBy(_._1)
-      state(cat) shouldBe expected
+      state(cat) shouldBe replayOracle(ops)
     }
+  }
+
+  test("concurrent topics whose tables share a name in different schemas stay isolated") {
+    // svc_db1.tb_item and svc_db2.tb_item ingest at once under the
+    // daemon's thread-per-topic runner: each must converge to its own
+    // replay oracle, and nothing is staged in the session-shared
+    // global_temp database
+    val (cat, _) = bootstrap(Seq("db1", "db2"))
+    val topics = Seq("dbz.db1.TB_ITEM", "dbz.db2.TB_ITEM")
+    val ctxs = topics.map(t => t -> PipelineContext(cat, registry, t, "dag1", "svc")).toMap
+    val rnd = new scala.util.Random(7)
+    val ops = topics.map(t => t -> randomOps(rnd, t)).toMap
+    for (bi <- 0 until 4) {
+      val batches = topics.map(t => t -> opsBatch(ops(t).slice(bi * 15, bi * 15 + 15))).toMap
+      StreamRunner.runTopicsConcurrently(spark, topics, concurrency = 2) { t =>
+        CdcPipeline.processBatch(batches(t), bi.toLong, ctxs(t))
+      } shouldBe empty
+    }
+    topics.foreach { t =>
+      state(cat, ctxs(t).fullTableName) shouldBe replayOracle(ops(t))
+    }
+    spark.catalog.listTables("global_temp").collect().map(_.name)
+      .filter(n => n.startsWith("upsert_view_") || n.startsWith("delete_view_")) shouldBe empty
   }
 
   test("stripConfluentHeader extracts ids and payloads as column exprs") {
