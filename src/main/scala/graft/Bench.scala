@@ -59,8 +59,10 @@ object Bench {
           .map(_.group(1).toDouble)
         for (c <- num; f <- fs) yield (c, f)
       } catch { case _: Throwable => None }
-    val abandoned0 =
-      org.apache.spark.util.GraftAccumulatorGate.abandonedScans.get()
+    // reported as "abandoned_scans" (the summary line's key set is
+    // fixed): store writes whose own file count could not be read,
+    // expected 0
+    val abandoned0 = org.apache.spark.sql.StoreWrite.unreadCounts.get()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       spark.sparkContext.setJobGroup(name, name)
@@ -77,8 +79,7 @@ object Bench {
     spark.sparkContext.setJobGroup("_calib", "_calib")
     val (cpuCalib1, fsCalib1) = PerfBudget.calibrate(spark)
     spark.sparkContext.clearJobGroup()
-    val abandonedDelta =
-      org.apache.spark.util.GraftAccumulatorGate.abandonedScans.get() - abandoned0
+    val abandonedDelta = org.apache.spark.sql.StoreWrite.unreadCounts.get() - abandoned0
     def js(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"

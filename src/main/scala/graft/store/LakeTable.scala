@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, StoreWrite}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructType}
@@ -601,116 +601,19 @@ class LakeTable(
         // the key order inside each leaf file survives; a bare
         // sort(sortCols) would be re-sorted by the writer
         distributed.sortWithinPartitions(partitionCols.map(col) ++ sortExprs: _*)
-    val reportedFiles = StoreTiming.time("data.parquet-write") {
-      // committer algorithm v2: task outputs land in the destination at
-      // TASK commit (parallel, executor-side) instead of the driver
-      // serially merging every leaf dir at job commit — on a wide
-      // multi-leaf write (an IVF batch append touches ~min(batch, nlist)
-      // cell leaves) the v1 driver merge is O(leaves) of FS latency.
-      // v2's risks, case by case:
-      //  - mid-JOB failure (partial files in the destination): isolated
-      //    by the store's design — `abs` is a fresh UUID dir no reader
-      //    can reach until the MANIFEST commit references it; a failed
-      //    write leaves only an orphan dir for the sweep.
-      //  - partial TASK commit then task retry (the MAPREDUCE-7282
-      //    class — the harvest below lists the dir, so a stray file
-      //    from an abandoned attempt would be committed as live rows):
-      //    file names are deterministic per (split, job UUID), so a
-      //    retried attempt OVERWRITES its predecessor's partials
-      //    (v2's mergePaths deletes an existing destination file
-      //    before renaming); strays survive only when the retry
-      //    produces a DIFFERENT file set, which takes nondeterministic
-      //    input placement — and Spark itself fails the job when an
-      //    indeterminate stage would retry past already-committed
-      //    tasks (SPARK-23207).
-      //  - the residue (e.g. a lost task-commit RPC leaving the
-      //    coordinator and the FS disagreeing): caught by the
-      //    validation below — the dir's file count is checked against
-      //    the commit protocol's OWN report (`numFiles`, summed from
-      //    coordinator-accepted attempts only) and a surplus fails the
-      //    write BEFORE the manifest commit, leaving an orphan dir.
-      LakeTable.committedFileCount {
-        val writer = out.write.mode("errorifexists")
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-          .parquet(abs)
-      }
-    }
-    // ONE recursive listing of the fresh dir feeds the harvest
-    // validation's count, the footer-stats harvest AND the bloom-floor
-    // byte probe below: on an object store every recursive walk is a
-    // round-trip per directory, and a write should pay for exactly one
-    val filesByLeaf = StoreTiming.time("data.post-write-listing")(
-      listDataFilesByLeaf(new Path(abs)))
-    validateHarvest(abs, reportedFiles,
-      filesByLeaf.iterator.map(_._2.size.toLong).sum)
-    val distMin = statsDistMinFiles(props)
-    val totalFiles = filesByLeaf.iterator.map(_._2.size).sum
-    val entries = StoreTiming.time("data.footer-stats") {
-      if (partitionCols.isEmpty) {
-        // an empty write (e.g. a delete that emptied its whole slice)
-        // commits NO entry: a zero-row entry has no stats and no
-        // sidecars, so it would survive every future prune walk as a
-        // permanent conservative keep — planned and "rewritten" by
-        // every later operation for no rows. The row count comes from
-        // the same footers the stats harvest already opens.
-        // Partitioned writes get this for free (no leaves → no
-        // entries).
-        val allFiles = filesByLeaf.flatMap(_._2)
-        val (stats, rows) =
-          if (totalFiles >= distMin)
-            FooterHarvest.distributed(spark,
-                allFiles.map(f => "" -> f.getPath.toString), df.schema)
-              .getOrElse("", (Map.empty[String, (String, String)], 0L))
-          else footerStatsAndRows(allFiles, df.schema)
-        if (rows == 0L) Nil
-        else Seq(ManifestEntry(dir, None, stats, StampAtCommit))
-      }
-      else {
-        // a leaf exists iff rows landed in it (Spark never writes an
-        // empty partition dir); a data file at the wrong Hive depth
-        // has no entry to live under — loudly impossible, not silent.
-        // Depth alone isn't proof of leaf-ness: a non-Hive directory
-        // that happens to sit at partition depth (a wrapper-FS staging
-        // dir, say) must not be harvested as a partition whose rel
-        // path can't parse as k=v values — every segment must carry
-        // '=' or the dir goes to the strays warning
-        val (leaves, strays) = filesByLeaf.partition { case (rel, _) =>
-          rel.nonEmpty && rel.count(_ == '/') == partitionCols.length - 1 &&
-            rel.split('/').forall(_.contains('='))
-        }
-        strays.foreach { case (rel, fl) =>
-          logger.warn(s"write to $abs left ${fl.size} data files at " +
-            s"non-leaf depth '$rel'; they are not harvested")
-        }
-        // at-scale writes (a backfill landing 10³–10⁴ files) harvest
-        // ALL leaves in one distributed job — zero driver-side footer
-        // opens on the commit path; the zero-IO no-prunable-column
-        // fast path applies to both shapes
-        if (totalFiles >= distMin &&
-            FooterHarvest.prunableCols(df.schema).nonEmpty) {
-          val byLeaf = FooterHarvest.distributed(spark,
-            leaves.flatMap { case (rel, fl) =>
-              fl.map(f => rel -> f.getPath.toString)
-            }, df.schema)
-          leaves.sortBy(_._1).map { case (rel, _) =>
-            ManifestEntry(dir, Some(rel),
-              byLeaf.get(rel).map(_._1).getOrElse(Map.empty), StampAtCommit)
-          }
-        } else {
-          // footer harvesting is metadata-sized but LATENCY-bound (one
-          // driver-side open per file): overlap the per-leaf reads
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: ExecutionContext = ExecutionContext.global
-          Await.result(
-            Future.traverse(leaves.sortBy(_._1)) { case (rel, fl) =>
-              Future(ManifestEntry(dir, Some(rel),
-                footerStats(fl, df.schema), StampAtCommit))
-            },
-            Duration.Inf)
-        }
-      }
+    val (filesByLeaf, harvested) =
+      writeDir(out, abs, partitionCols, df.schema, props, needRows = partitionCols.isEmpty)
+    // an empty unpartitioned write (e.g. a delete that emptied its
+    // whole slice) commits NO entry: a zero-row entry has no stats and
+    // no sidecars, so it would survive every future prune walk as a
+    // permanent conservative keep — planned and "rewritten" by every
+    // later operation for no rows. Partitioned writes get this for free
+    // (a leaf exists iff rows landed in it).
+    val entries = harvested.collect {
+      case (rel, (stats, _)) if partitionCols.nonEmpty =>
+        ManifestEntry(dir, Some(rel), stats, StampAtCommit)
+      case (_, (stats, rows)) if rows > 0L =>
+        ManifestEntry(dir, None, stats, StampAtCommit)
     }
     val bloomCols0 = bloomColumnsFor(df.schema, partitionCols, props)
     val writtenBytes = filesByLeaf.iterator.flatMap(_._2).map(_.getLen).sum
@@ -825,34 +728,124 @@ class LakeTable(
       }, Duration.Inf).toSet
   }
 
-  /** Aggregate column chunk min/max across the given parquet files
-    * (from the caller's post-write listing — footer reads are the only
-    * IO here), for the stats-prunable Spark types (integral, floating,
-    * string). Values are stored as strings in the manifest; pruning
-    * parses them back by column type. Columns whose chunks lack
-    * usable stats are omitted (⇒ never pruned on). */
-  private def footerStats(
-      files: Seq[FileStatus], schema: StructType): Map[String, (String, String)] = {
-    // zero-IO fast path for callers that don't need the row count
-    // (partitioned leaf harvest, delete files): with no prunable
-    // column there is nothing to read footers FOR
-    val anyPrunable = schema.fields.exists(f => StatsPruning.supported(f.dataType))
-    if (!anyPrunable) Map.empty else footerStatsAndRows(files, schema)._1
+  /** The one write step behind [[writeData]] and [[writeDeleteFile]]:
+    * write `out` as parquet at `abs` through [[StoreWrite]], list the
+    * fresh dir ONCE, check that listing against the write's own
+    * committed-file count ([[validateHarvest]]), and [[harvest]] the
+    * footer stats of each leaf ("" for an unpartitioned write). Returns
+    * the listing (the bloom-floor byte probe reads it too) and the
+    * per-leaf `(stats, rows)`, sorted by leaf.
+    *
+    * Committer algorithm v2: task outputs land in the destination at
+    * TASK commit (parallel, executor-side) instead of the driver
+    * serially merging every leaf dir at job commit — on a wide
+    * multi-leaf write (an IVF batch append touches ~min(batch, nlist)
+    * cell leaves) the v1 driver merge is O(leaves) of FS latency.
+    * v2's risks, case by case:
+    *  - mid-JOB failure (partial files in the destination): isolated
+    *    by the store's design — `abs` is a fresh UUID dir no reader
+    *    can reach until the MANIFEST commit references it; a failed
+    *    write leaves only an orphan dir for the sweep.
+    *  - partial TASK commit then task retry (the MAPREDUCE-7282
+    *    class — the harvest lists the dir, so a stray file from an
+    *    abandoned attempt would be committed as live rows): file names
+    *    are deterministic per (split, job UUID), so a retried attempt
+    *    OVERWRITES its predecessor's partials (v2's mergePaths deletes
+    *    an existing destination file before renaming); strays survive
+    *    only when the retry produces a DIFFERENT file set, which takes
+    *    nondeterministic input placement — and Spark itself fails the
+    *    job when an indeterminate stage would retry past
+    *    already-committed tasks (SPARK-23207).
+    *  - the residue (e.g. a lost task-commit RPC leaving the
+    *    coordinator and the FS disagreeing): caught by the validation
+    *    here — the dir's file count is checked against the commit
+    *    protocol's OWN report for this write (`numFiles`, summed from
+    *    coordinator-accepted attempts only) and a surplus fails the
+    *    write BEFORE the manifest commit, leaving an orphan dir. */
+  private def writeDir(
+      out: DataFrame,
+      abs: String,
+      partitionCols: Seq[String],
+      schema: StructType,
+      props: Map[String, String],
+      needRows: Boolean): (Seq[(String, Seq[FileStatus])], Seq[(String, (Map[String, (String, String)], Long))]) = {
+    val reported = StoreTiming.time("data.parquet-write")(
+      StoreWrite.parquet(out, abs, partitionCols))
+    // ONE recursive listing of the fresh dir feeds the validation
+    // count, the footer-stats harvest AND the bloom-floor byte probe:
+    // on an object store every recursive walk is a round-trip per
+    // directory, and a write should pay for exactly one
+    val filesByLeaf = StoreTiming.time("data.post-write-listing")(
+      listDataFilesByLeaf(new Path(abs)))
+    validateHarvest(abs, reported, filesByLeaf.iterator.map(_._2.size.toLong).sum)
+    val leaves =
+      if (partitionCols.isEmpty) Seq("" -> filesByLeaf.flatMap(_._2))
+      else {
+        // a data file at the wrong Hive depth has no entry to live
+        // under — loudly impossible, not silent. Depth alone isn't
+        // proof of leaf-ness: a non-Hive directory that happens to sit
+        // at partition depth (a wrapper-FS staging dir, say) must not
+        // be harvested as a partition whose rel path can't parse as
+        // k=v values — every segment must carry '=' or the dir goes to
+        // the strays warning
+        val (leaves, strays) = filesByLeaf.partition { case (rel, _) =>
+          rel.nonEmpty && rel.count(_ == '/') == partitionCols.length - 1 &&
+            rel.split('/').forall(_.contains('='))
+        }
+        strays.foreach { case (rel, fl) =>
+          logger.warn(s"write to $abs left ${fl.size} data files at " +
+            s"non-leaf depth '$rel'; they are not harvested")
+        }
+        leaves
+      }
+    (filesByLeaf, StoreTiming.time("data.footer-stats")(harvest(leaves, schema, props, needRows)))
   }
 
-  /** [[footerStats]] plus the files' total parquet ROW count (from the
-    * same footers — no extra IO): the unpartitioned write path uses the
-    * count to skip committing an entry for an all-empty write.
-    * Driver-local shape of [[FooterHarvest]] — callers dispatch to
-    * [[FooterHarvest.distributed]] past the file-count threshold. */
-  private def footerStatsAndRows(
-      files: Seq[FileStatus], schema: StructType): (Map[String, (String, String)], Long) = {
+  /** Per-leaf column chunk min/max and parquet row count from the
+    * footers of the listed files, sorted by leaf — footer reads are
+    * the only IO. Stats cover the stats-prunable Spark types
+    * (integral, floating, string), stored as strings that pruning
+    * parses back by column type; a column whose chunks lack usable
+    * stats is omitted (⇒ never pruned on). Writes landing at least
+    * [[statsDistMinFiles]] files harvest in ONE distributed job
+    * ([[FooterHarvest.distributed]]) — zero driver-side opens for a
+    * 10³–10⁴-file backfill; smaller ones open footers on the driver,
+    * latency-overlapped per leaf. With no prunable column and no row
+    * count wanted there is nothing to read footers FOR: every leaf
+    * gets empty stats and no IO. */
+  private def harvest(
+      filesByLeaf: Seq[(String, Seq[FileStatus])],
+      schema: StructType,
+      props: Map[String, String],
+      needRows: Boolean): Seq[(String, (Map[String, (String, String)], Long))] = {
+    val leaves = filesByLeaf.sortBy(_._1)
     val prunable = FooterHarvest.prunableCols(schema)
-    val conf = spark.sparkContext.hadoopConfiguration
-    FooterHarvest.finish(files.foldLeft(FooterHarvest.EmptyPartial) { (p, st) =>
-      FooterHarvest.merge(prunable, p,
-        FooterHarvest.filePartial(st.getPath.toString, conf, prunable))
-    })
+    val empty = (Map.empty[String, (String, String)], 0L)
+    if (prunable.isEmpty && !needRows) leaves.map { case (rel, _) => rel -> empty }
+    else if (leaves.iterator.map(_._2.size).sum >= statsDistMinFiles(props)) {
+      val byLeaf = FooterHarvest.distributed(spark,
+        leaves.flatMap { case (rel, fl) => fl.map(f => rel -> f.getPath.toString) }, schema)
+      leaves.map { case (rel, _) => rel -> byLeaf.getOrElse(rel, empty) }
+    } else {
+      val conf = spark.sparkContext.hadoopConfiguration
+      def leafStats(leaf: (String, Seq[FileStatus])) =
+        leaf._1 -> FooterHarvest.finish(leaf._2.foldLeft(FooterHarvest.EmptyPartial) { (p, st) =>
+          FooterHarvest.merge(prunable, p,
+            FooterHarvest.filePartial(st.getPath.toString, conf, prunable))
+        })
+      // footer harvesting is metadata-sized but LATENCY-bound (one
+      // driver-side open per file): overlap the per-leaf reads. A single
+      // leaf (every unpartitioned write and delete file) has nothing to
+      // overlap and reads on the calling thread — the hop onto the
+      // global pool measurably slowed the multi-topic CDC loop
+      if (leaves.size <= 1) leaves.map(leafStats)
+      else {
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        implicit val ec: ExecutionContext = ExecutionContext.global
+        Await.result(Future.traverse(leaves)(leaf => Future(leafStats(leaf))), Duration.Inf)
+      }
+    }
   }
 
   /** `write.stats.distributed-min-files`: writes that land at least
@@ -868,13 +861,13 @@ class LakeTable(
       .flatMap(v => scala.util.Try(v.toInt).toOption)
       .getOrElse(LakeTable.DefaultStatsDistMinFiles)
 
-  /** Harvest validation (see the committer-v2 comment in [[writeData]]):
+  /** Harvest validation (see the committer-v2 comment in [[writeDir]]):
     * the manifest harvest trusts a DIRECTORY LISTING of the written
     * dir, so a stray data file left by an abandoned task attempt would
-    * be committed as live rows. When the commit protocol's own report
-    * was captured, a surplus file FAILS the write here — before the
-    * manifest commit, so no reader ever sees the dir and it becomes an
-    * orphan for the sweep. A deficit only warns: `numFiles` counts
+    * be committed as live rows. When [[StoreWrite]] read the write's
+    * own committed-file count, a surplus file FAILS the write here —
+    * before the manifest commit, so no reader ever sees the dir and it
+    * becomes an orphan for the sweep. A deficit only warns: `numFiles` counts
     * empty schema-preserving files some layouts elide from listings,
     * and aborting a good commit is worse than harvesting a short dir
     * the footer reads would trip over anyway. This arity walks the dir
@@ -1822,26 +1815,12 @@ class LakeTable(
     // automatically, while morRead's explicit-path reads still see them
     val dir = "_del-" + UUID.randomUUID().toString.take(14)
     val abs = s"$location/data/$dir"
-    // same harvest-validation net as writeData: a stray file here would
-    // PHANTOM-DELETE rows (every key tuple in the dir masks), strictly
-    // worse than stray data rows
-    val reported = LakeTable.committedFileCount {
-      keyDf.write.mode("errorifexists").parquet(abs)
-    }
-    // one listing feeds both the validation count and the stats read,
-    // same as writeData
-    val files = listDataFilesByLeaf(new Path(abs))
-    validateHarvest(abs, reported, files.iterator.map(_._2.size.toLong).sum)
+    // same write step as writeData, so the same harvest-validation
+    // net: a stray file here would PHANTOM-DELETE rows (every key tuple
+    // in the dir masks), strictly worse than stray data rows
     val keySchema = StructType(s.schema.fields.filter(f => keys.contains(f.name)))
-    val delFiles = files.flatMap(_._2)
-    val stats =
-      if (delFiles.size >= statsDistMinFiles(s.properties) &&
-          FooterHarvest.prunableCols(keySchema).nonEmpty)
-        FooterHarvest.distributed(spark,
-            delFiles.map(f => "" -> f.getPath.toString), keySchema)
-          .get("").map(_._1).getOrElse(Map.empty)
-      else footerStats(delFiles, keySchema)
-    ManifestEntry(dir, None, stats, StampAtCommit)
+    val (_, harvested) = writeDir(keyDf, abs, Nil, keySchema, s.properties, needRows = false)
+    ManifestEntry(dir, None, harvested.head._2._1, StampAtCommit)
   }
 
   /** MERGE INTO ... merge-on-read: commit the source batch as a NEW
@@ -3145,60 +3124,6 @@ class CommitConflictException(msg: String, cause: Throwable)
 
 object LakeTable {
   private val VersionFileRe = "v(\\d+)\\.json".r
-
-  /** The per-node metric name Spark's BasicWriteJobStatsTracker
-    * publishes committed-file counts under (pinned by spec). */
-  private val WrittenFilesMetric = "number of written files"
-
-  /** Committed-file count of ONE file-write command, as reported by the
-    * commit protocol itself: Spark's `BasicWriteJobStatsTracker` sums
-    * per-task stats returned only by task attempts whose commit the
-    * OutputCommitCoordinator accepted, and SETS them on the write
-    * node's "number of written files" SQLMetric SYNCHRONOUSLY, on the
-    * driver, before `df.write` returns (`FileFormatWriter.write` →
-    * `processStats`). So the value is read WAIT-FREE from the
-    * accumulator registry itself ([[GraftAccumulatorGate]]): an id
-    * watermark taken before `body` brackets exactly the accumulators
-    * the write created.
-    *
-    * This replaced an SQL-status-store poll: every reporting channel
-    * for the same number (status store, QueryExecutionListener) rides
-    * the ASYNC listener bus, which a busy session backlogs by seconds —
-    * the poll coupled every store commit's wall-clock to diagnostics
-    * drain latency (measured: stream-heavy bench heads 4–6× inflated,
-    * +quantized multi-second waits; the accumulator read is ~0 ms and
-    * cannot lag, because there is nothing to wait FOR).
-    *
-    * Returns the MAX across candidate write metrics in the bracket:
-    * `body` runs exactly one write on THIS thread, but another session
-    * thread may register its own write's metric inside the window
-    * (accumulator ids are global). Max keeps the abort sound —
-    * `found > max(candidates)` implies a surplus no candidate write
-    * accounts for, so it can never false-abort; a concurrent LARGER
-    * write only weakens the net to warn-level for this one commit.
-    * The max-soundness claim assumes the bracketed write's OWN metric
-    * is among the candidates; the registry holds weak references, so
-    * the gate enforces that by abandoning any scan that finds a
-    * garbage-collected entry in the bracket (a partial scan could have
-    * lost our metric while keeping a smaller foreign one — an
-    * undercount here is the one path to a false abort). The residual
-    * window — our metric collected AND cleaner-removed microseconds
-    * after the write set it, reading as absent — is documented at
-    * [[org.apache.spark.util.GraftAccumulatorGate.namedLongsSince]].
-    * Returns None when the registry yields nothing or the scan was
-    * abandoned — callers must degrade to their unvalidated behavior
-    * on None, never abort. */
-  private[store] def committedFileCount(body: => Unit): Option[Long] = {
-    val mark = scala.util.Try(
-      org.apache.spark.util.GraftAccumulatorGate.idWatermark()).getOrElse(-1L)
-    body
-    if (mark < 0) None
-    else scala.util.Try(
-      org.apache.spark.util.GraftAccumulatorGate
-        .namedLongsSince(mark, WrittenFilesMetric)).toOption
-      .flatten
-      .flatMap(_.maxOption)
-  }
 
   private val StatsFileRe = "v(\\d+)\\.stats\\.json".r
   private val TagsFileRe = "tags-v(\\d+)\\.json".r

@@ -1,6 +1,9 @@
 package graft.store
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.CyclicBarrier
+
+import org.apache.spark.sql.{DataFrame, StoreWrite}
 
 import graft.SparkSpec
 
@@ -10,31 +13,52 @@ import graft.SparkSpec
   * retry with a different file set — the MAPREDUCE-7282 class) would
   * be committed as live rows. The net: the dir's file count is checked
   * against the commit protocol's OWN per-task-commit report
-  * (`numFiles`), and a surplus fails the write BEFORE the manifest
-  * commit. */
+  * (`numFiles`, read off the write's own command by [[StoreWrite]]),
+  * and a surplus fails the write BEFORE the manifest commit. */
 class CommitValidationSpec extends SparkSpec {
   import spark.implicits._
 
-  test("committedFileCount captures the protocol's report for the bracketed write") {
-    val dir = Files.createTempDirectory("cv").toString
-    val abs = s"$dir/data/${java.util.UUID.randomUUID().toString.take(18)}"
-    val reported = LakeTable.committedFileCount {
-      (1 to 90).map(i => (i.toLong, s"v$i", i % 3))
-        .toDF("id", "v", "p")
-        .repartition(2)
-        .write.mode("errorifexists")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .partitionBy("p").parquet(abs)
-    }
-    val onDisk = Files.walk(java.nio.file.Paths.get(abs)).iterator()
+  private def parquetFilesUnder(abs: String): Long = {
     var n = 0L
-    onDisk.forEachRemaining { p =>
+    Files.walk(Paths.get(abs)).iterator().forEachRemaining { p =>
       val name = p.getFileName.toString
       if (name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith("."))
         n += 1
     }
-    reported shouldBe Some(n)
-    n should be > 0L
+    n
+  }
+
+  private def freshPath(): String =
+    s"${Files.createTempDirectory("cv")}/data/${java.util.UUID.randomUUID().toString.take(18)}"
+
+  /** Writes `df` through the shim; its count must equal the files on disk. */
+  private def assertExactCount(df: DataFrame, partitionCols: Seq[String] = Nil): Long = {
+    val abs = freshPath()
+    val reported = StoreWrite.parquet(df, abs, partitionCols)
+    val onDisk = parquetFilesUnder(abs)
+    onDisk should be > 0L
+    reported shouldBe Some(onDisk)
+    onDisk
+  }
+
+  test("StoreWrite counts partitioned, unpartitioned, persisted writes") {
+    val unread0 = StoreWrite.unreadCounts.get()
+    // adaptive execution on (the shared session: the write node sits
+    // under an AdaptiveSparkPlanExec) and off (a child session, so the
+    // shared session's conf stays untouched)
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    Seq(spark, noAqe).foreach { s =>
+      val rows = s.range(0, 90).selectExpr("id", "CAST(id AS STRING) AS v", "id % 3 AS p")
+      assertExactCount(rows.repartition(2), Seq("p")) should be > 1L
+      assertExactCount(rows.drop("p").repartition(4)) shouldBe 4L
+      val persisted = rows.repartition(3).persist()
+      try {
+        persisted.count()
+        assertExactCount(persisted) shouldBe 3L
+      } finally persisted.unpersist(false)
+    }
+    StoreWrite.unreadCounts.get() shouldBe unread0
   }
 
   test("a stray file in the written dir fails the commit; the report's absence degrades") {
@@ -75,49 +99,25 @@ class CommitValidationSpec extends SparkSpec {
     t.read.count() shouldBe 80
   }
 
-  test("the capture is wait-free: no write in the bracket yields None, fast") {
-    // the old status-store poll burned its full 5 s cap whenever no
-    // matching execution appeared — the accumulator bracket just sees
-    // zero candidates and returns immediately (this is the property
-    // that keeps stream-heavy sessions, whose listener bus lags by
-    // seconds, from paying diagnostics latency on every commit)
-    val t0 = System.nanoTime()
-    val reported = LakeTable.committedFileCount {
-      spark.range(10).count() // an action, but not a file write
-      ()
-    }
-    val wallMs = (System.nanoTime() - t0) / 1e6
-    reported shouldBe None
-    wallMs should be < 2000.0
-  }
-
-  test("concurrent foreign writes keep the abort sound: max semantics") {
-    // a write on ANOTHER thread registers its own "number of written
-    // files" metric inside our bracket; committedFileCount returns the
-    // max, so found > reported still implies a genuine surplus (it
-    // exceeds EVERY candidate write's count) and can never false-abort
-    val dir = Files.createTempDirectory("cvc").toString
-    // a foreign-thread failure must surface as the test's OWN failure
-    // cause, not as an inexplicable max=1 assertion miss downstream
-    @volatile var foreignFailure: Option[Throwable] = None
-    val reported = LakeTable.committedFileCount {
-      val foreign = new Thread(() =>
-        try (1 to 40).map(i => (i.toLong, s"f$i")).toDF("id", "v")
-          .repartition(4)
-          .write.mode("errorifexists").parquet(s"$dir/foreign")
-        catch { case scala.util.control.NonFatal(e) => foreignFailure = Some(e) })
-      foreign.start()
-      (1L to 10L).toDF("id").coalesce(1)
-        .write.mode("errorifexists").parquet(s"$dir/mine")
-      foreign.join()
-    }
-    foreignFailure.foreach(e => fail("foreign write failed", e))
-    // the registry scan abandons (None) if a GC collected a bracket
-    // entry mid-test — name the cause instead of a bare NoSuchElement
-    withClue("committedFileCount returned None (scan abandoned or no metric captured): ") {
-      reported.isDefined shouldBe true
-    }
-    // both writes' metrics are candidates; max >= the larger (4 files)
-    reported.get should be >= 4L
+  test("a 1-file write racing a 4-file write reports exactly 1") {
+    // each write reads its own command's metric, so a concurrent write
+    // on another thread can neither raise nor lower this one's count
+    val barrier = new CyclicBarrier(2)
+    @volatile var foreign: Either[Throwable, Option[Long]] = Right(None)
+    val t = new Thread(() =>
+      foreign =
+        try {
+          val df = (1 to 40).map(i => (i.toLong, s"f$i")).toDF("id", "v").repartition(4)
+          barrier.await()
+          Right(StoreWrite.parquet(df, freshPath(), Nil))
+        } catch { case scala.util.control.NonFatal(e) => Left(e) })
+    t.start()
+    val mine = (1L to 10L).toDF("id").coalesce(1)
+    barrier.await()
+    val reported = StoreWrite.parquet(mine, freshPath(), Nil)
+    t.join()
+    foreign.left.foreach(e => fail("foreign write failed", e))
+    reported shouldBe Some(1L)
+    foreign shouldBe Right(Some(4L))
   }
 }
