@@ -2,8 +2,16 @@ package graft.store
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.{ListenerBusDrain, SparkEnv}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, DeleteKeyMask}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.SparkSpec
 
@@ -11,7 +19,7 @@ import graft.SparkSpec
   * O(batch) and never rewrite data; reads mask deleted keys by
   * sequence number; position-delete compaction physically folds the
   * delete files away without changing what a read returns. */
-class MergeOnReadSpec extends SparkSpec {
+class MergeOnReadSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def freshCatalog(): LakeCatalog = {
     val wh = Files.createTempDirectory("mor-test").toString
@@ -26,6 +34,20 @@ class MergeOnReadSpec extends SparkSpec {
   private def state(t: LakeTable): Seq[(Long, String, Double)] =
     t.read.orderBy("id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
+
+  private def joins(p: SparkPlan): Int = collect(p) { case j: BaseJoinExec => j }.size
+
+  /** Data dirs scanned under a delete-key mask, and all data dirs scanned. */
+  private def scannedDirs(df: DataFrame): (Seq[String], Seq[String]) = {
+    val plan = df.queryExecution.executedPlan
+    def dirs(p: SparkPlan): Seq[String] =
+      collect(p) { case sc: FileSourceScanExec => sc }
+        .flatMap(_.relation.location.rootPaths.map(_.getName))
+    val masked = collect(plan) {
+      case f: FilterExec if f.condition.exists(_.isInstanceOf[DeleteKeyMask]) => f
+    }
+    (masked.flatMap(dirs), dirs(plan))
+  }
 
   test("mergeIntoMoR upserts without rewriting any data dir") {
     val t = freshCatalog().table("db.t")
@@ -166,13 +188,13 @@ class MergeOnReadSpec extends SparkSpec {
     // read PLAIN (provably disjoint by manifest stats)
     t.deleteWhereExistsMoR(df(Seq((1L, "-", 0.0))).select("id"), Seq("id"))
     t.read.orderBy("id").collect().map(_.getLong(0)).toSeq shouldBe Seq(2L, 100L)
-    def joins(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-      p.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }.size +
-        p.collect { case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          joins(a.executedPlan) }.sum
-    }
-    // one anti-join (over the maskable low-range entry only)
-    joins(t.read.queryExecution.executedPlan) should be >= 1
+    // the maskable low-range entry's scan carries the delete-key mask;
+    // the disjoint high-range entry reads plain
+    val Seq(lowDir, highDir) = t.currentSnapshot.get.entries.map(_.dir)
+    val (masked, scanned) = scannedDirs(t.read)
+    masked shouldBe Seq(lowDir)
+    scanned.sorted shouldBe Seq(lowDir, highDir).sorted
+    joins(t.read.queryExecution.executedPlan) shouldBe 0
     // a table whose only delete is key-disjoint from EVERY entry reads
     // with no join at all — the masked path is skipped entirely
     val u = freshCatalog().table("db.u")
@@ -261,6 +283,130 @@ class MergeOnReadSpec extends SparkSpec {
     u.morMaskableCounts shouldBe ((2, 2))
     u.read.select("id").collect().map(_.getLong(0)).sorted shouldBe
       Seq(2L, 500000L, 500001L)
+    // past the cap the driver holds no keys: the read takes the
+    // anti-join fallback, with the same rows
+    joins(u.read.queryExecution.executedPlan) should be >= 1
+    scannedDirs(u.read)._1 shouldBe empty
+  }
+
+  test("a PK lookup under driver-held delete keys runs one Spark job") {
+    import spark.implicits._
+    val t = freshCatalog().table("db.jobs")
+    t.createOrReplace(df((1L to 20L).map(i => (i, s"s$i", i.toDouble))))
+    // the merge batch's own delete file ({5, 9}) shares its sequence
+    // number; the later delete's key range overlaps the batch, so the
+    // batch is masked, but by the later delete alone
+    t.mergeIntoMoR(df(Seq((5L, "U", 50.0), (9L, "V", 90.0))), Seq("id"))
+    t.deleteWhereExistsMoR(Seq(7L, 8L).toDF("id"), Seq("id"))
+    t.currentSnapshot.get.deleteEntries should have size 2
+    val group = "mor-lookup-jobs"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    def lookup(id: Long): (Seq[String], Int) = {
+      ListenerBusDrain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "point lookup")
+      val rows =
+        try t.readWhere(col("id") === id).collect().map(_.getString(1)).toSeq
+        finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      (rows, jobs.get)
+    }
+    try {
+      // cold: loading both delete files' keys is driver-side (0 jobs),
+      // so the whole lookup is the scan's one job
+      lookup(5L) shouldBe ((Seq("U"), 1))
+      // warm, and a key the second delete masks
+      lookup(7L) shouldBe ((Nil, 1))
+      lookup(9L) shouldBe ((Seq("V"), 1))
+      lookup(10L) shouldBe ((Seq("s10"), 1))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("delete-key mask: a two-column key with a null component") {
+    import spark.implicits._
+    val t = freshCatalog().table("db.k2")
+    t.createOrReplace(Seq[(Long, String, Long)](
+      (1L, "x", 10L), (1L, null, 11L), (2L, null, 20L), (2L, "y", 21L), (3L, null, 30L))
+      .toDF("a", "b", "v"))
+    t.deleteWhereExistsMoR(Seq[(Long, String)]((1L, null), (2L, "y")).toDF("a", "b"),
+      Seq("a", "b"))
+    scannedDirs(t.read)._1 should not be empty
+    t.read.select("v").as[Long].collect().sorted shouldBe Seq(10L, 20L, 30L)
+    t.readWhere(col("a") === 1L).select("v").as[Long].collect().toSeq shouldBe Seq(10L)
+    t.readWhere(col("b").isNull).select("v").as[Long].collect().sorted shouldBe Seq(20L, 30L)
+  }
+
+  test("delete-key mask: an int key promoted to long under an outstanding delete") {
+    import spark.implicits._
+    val t = freshCatalog().table("db.pr")
+    t.createOrReplace(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "s"))
+    t.deleteWhereExistsMoR(Seq(2).toDF("id"), Seq("id"))
+    t.read.select("s").as[String].collect().sorted shouldBe Seq("a", "c")
+    // the delete file stays int32; the widened read masks it as long
+    t.alterColumnType("id", LongType)
+    scannedDirs(t.read)._1 should not be empty
+    t.read.select("id").as[Long].collect().sorted shouldBe Seq(1L, 3L)
+    t.readWhere(col("id") === 2L).count() shouldBe 0
+    t.readWhere(col("id") === 3L).select("s").as[String].collect().toSeq shouldBe Seq("c")
+    // a later append of the deleted key is newer than the delete
+    t.append(Seq((2L, "again")).toDF("id", "s"))
+    t.readWhere(col("id") === 2L).select("s").as[String].collect().toSeq shouldBe Seq("again")
+  }
+
+  test("delete-key mask: float and double keys match NaN to NaN and -0.0 to 0.0") {
+    import spark.implicits._
+    val d = freshCatalog().table("db.dbl")
+    d.createOrReplace(Seq((Double.NaN, 1), (0.0, 2), (-0.0, 3), (1.5, 4)).toDF("k", "v"))
+    d.deleteWhereExistsMoR(Seq(Double.NaN, -0.0).toDF("k"), Seq("k"))
+    scannedDirs(d.read)._1 should not be empty
+    d.read.select("v").as[Int].collect().toSeq shouldBe Seq(4)
+    val f = freshCatalog().table("db.flt")
+    f.createOrReplace(Seq((Float.NaN, 1), (0.0f, 2), (-0.0f, 3), (1.5f, 4)).toDF("k", "v"))
+    f.deleteWhereExistsMoR(Seq(Float.NaN, 0.0f).toDF("k"), Seq("k"))
+    scannedDirs(f.read)._1 should not be empty
+    f.read.select("v").as[Int].collect().toSeq shouldBe Seq(4)
+    // a two-column key compares its components the same way
+    val m = freshCatalog().table("db.ld")
+    m.createOrReplace(Seq((1L, Double.NaN, 1), (1L, 0.0, 2), (2L, Double.NaN, 3),
+      (2L, -0.0, 4), (3L, 1.5, 5)).toDF("a", "k", "v"))
+    m.deleteWhereExistsMoR(Seq((1L, Double.NaN), (2L, 0.0)).toDF("a", "k"), Seq("a", "k"))
+    scannedDirs(m.read)._1 should not be empty
+    m.read.select("v").as[Int].collect().sorted shouldBe Seq(2, 3, 5)
+  }
+
+  test("delete-key mask: the tuples travel by broadcast, not in the task closure") {
+    import spark.implicits._
+    val t = freshCatalog().table("db.bc")
+    t.createOrReplace(df((1L to 20000L).map(i => (i, "s", 0.0))))
+    t.deleteWhereExistsMoR((1L to 20000L by 2).toDF("id"), Seq("id"))
+    val mask = t.read.queryExecution.executedPlan.collectFirst {
+      case f: FilterExec => f.condition.collectFirst { case m: DeleteKeyMask => m }
+    }.flatten.get
+    val ser = SparkEnv.get.closureSerializer.newInstance()
+    val bytes = ser.serialize(mask)
+    bytes.limit() should be < 4096
+    ser.deserialize[DeleteKeyMask](bytes).held.map(_.tuples.size) shouldBe Seq(10000)
+    t.read.count() shouldBe 10000
+  }
+
+  test("delete-key mask: a session without the vectorized parquet reader takes the join") {
+    import spark.implicits._
+    val rowReader = spark.newSession()
+    rowReader.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    val t = new LakeCatalog(rowReader, Files.createTempDirectory("mor-test").toString)
+      .table("db.rr")
+    t.createOrReplace(df((1L to 6L).map(i => (i, s"s$i", i.toDouble))))
+    t.deleteWhereExistsMoR(Seq(2L, 5L).toDF("id"), Seq("id"))
+    joins(t.read.queryExecution.executedPlan) should be >= 1
+    scannedDirs(t.read)._1 shouldBe empty
+    t.read.select("id").as[Long].collect().sorted shouldBe Seq(1L, 3L, 4L, 6L)
   }
 
   test("a transient sidecar read failure degrades one pass and never sticks") {

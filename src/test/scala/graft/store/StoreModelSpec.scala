@@ -59,6 +59,11 @@ class StoreModelSpec extends SparkSpec {
     var history = Map(t.currentSnapshot.get.version -> model)
     var nextId = 1000L
     var lastOp = "create"
+    // every id the table ever held: each step looks up one live key
+    // and two of these, live or deleted; probes draw from their own
+    // generator so the op sequence each seed drives stays the same
+    var seen = model.keySet
+    val probeRnd = new scala.util.Random(seed + 1)
 
     def freshRows(n: Int, tag: String): Seq[Row3] = {
       val rows = (0 until n).map { k =>
@@ -163,14 +168,21 @@ class StoreModelSpec extends SparkSpec {
       withClue(s"seed=$seed step=$step op=$lastOp: ") {
         got shouldBe want
       }
-      // point lookups drive the stats/bloom/partition prune path under
-      // every op interleaving: an existing key must come back exactly
-      // once, a never-inserted key exactly never (an unsound prune —
-      // or a stale sidecar — fails here, not just in BloomSkippingSpec)
-      model.keys.toSeq.sorted.headOption.foreach { probeId =>
+      // point lookups drive the stats/bloom/partition prune path and
+      // the delete-key mask under every op interleaving: a live key
+      // must come back exactly once with the model's row, a deleted or
+      // never-inserted key exactly never (an unsound prune, a stale
+      // sidecar or a wrong mask fails here, not just in
+      // BloomSkippingSpec or MergeOnReadSpec)
+      seen ++= model.keySet
+      val probes = pick(probeRnd, model.keys.toSeq.sorted, 1) ++
+        pick(probeRnd, seen.toSeq.sorted, 2)
+      probes.foreach { probeId =>
         withClue(s"seed=$seed step=$step op=$lastOp probe=$probeId: ") {
           t.readWhere(col("id") === lit(probeId)).collect()
-            .map(_.getLong(0)).toSeq shouldBe Seq(probeId)
+            .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.get(3).toString.toLong))
+            .toSeq shouldBe model.get(probeId).map { case (st, amt) =>
+              (probeId, st, amt, probeId % 100) }.toSeq
         }
       }
       withClue(s"seed=$seed step=$step op=$lastOp miss-probe: ") {
