@@ -286,19 +286,14 @@ private[graft] object ProbeStore {
     val hfs = new org.apache.hadoop.fs.Path(t.location)
       .getFileSystem(c.spark.sparkContext.hadoopConfiguration)
 
-    def metaBytes(): Long = {
-      val head = t.currentSnapshot.get.version
-      hfs.getFileStatus(new org.apache.hadoop.fs.Path(
-        s"${t.location}/_meta/" + f"v$head%05d.json")).getLen
-    }
+    def metaBytes(): Long =
+      hfs.getFileStatus(t.log.versionFile(t.currentSnapshot.get.version)).getLen
 
     // total bytes of segment files on disk — the delta across a commit
     // is the metadata that commit actually WROTE (reuse writes nothing)
-    def segBytes(): Long = {
-      val p = new org.apache.hadoop.fs.Path(s"${t.location}/_meta/manifests")
-      if (!hfs.exists(p)) 0L
-      else hfs.listStatus(p).map(_.getLen).sum
-    }
+    def segBytes(): Long =
+      if (!hfs.exists(t.log.segmentDir)) 0L
+      else hfs.listStatus(t.log.segmentDir).map(_.getLen).sum
 
     def measure(label: String, appendSecs: Double, committedBytes: Long): Unit = {
       val s = t.currentSnapshot.get

@@ -11,7 +11,7 @@ import graft.core.{BoundedCache, TableNaming}
 import graft.functions.Transforms
 import graft.ledger.Watermark
 import graft.maintenance.{Maintenance, ProcessedTableTracker}
-import graft.store.{LakeCatalog, LakeTable}
+import graft.store.{LakeCatalog, LakeTable, StoreConf}
 
 /** Schema Registry lookup: id → Avro schema JSON. The HTTP variant of
   * the reference is the `GET /schemas/ids/{id}` endpoint
@@ -178,7 +178,9 @@ object CdcPipeline {
 
     logger.info(s"<batch-$batchId> Processing ${ctx.topic}")
     batchDf.persist(StorageLevel.MEMORY_AND_DISK)
-    val stats =
+    // the batch's frames are batch-sized store inputs: coalesce them
+    // bytes-first, as the store's own actions are (see StoreConf)
+    val stats = StoreConf.bytesFirstCoalesce(batchDf.sparkSession) {
       try {
         val idPairs = batchDf.select("value_schema_id", "key_schema_id").distinct()
           .collect().map(r => (r.getInt(0), r.getInt(1)))
@@ -212,6 +214,7 @@ object CdcPipeline {
           min("offset").as("min_offset"),
           max("offset").as("max_offset")).head()
       } finally batchDf.unpersist()
+    }
 
     Watermark.appendCdcWatermark(
       ctx.catalog, ctx.dagId, ctx.icebergSchema, ctx.icebergTable,

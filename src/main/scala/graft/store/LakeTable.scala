@@ -1,12 +1,7 @@
 package graft.store
 
-import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, DeleteKeyMask, DeleteKeys, SparkSession, StoreWrite}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -94,7 +89,10 @@ case class Snapshot(
     properties: Map[String, String],
     summary: Map[String, String],
     deleteEntries: Seq[ManifestEntry] = Nil,
-    lastSequenceNumber: Long = 0L)
+    lastSequenceNumber: Long = 0L,
+    // the segment files `entries` were read from or written to (empty
+    // for a pre-segment inline snapshot and for one not yet written)
+    segments: Seq[SegmentRef] = Nil)
 
 /** Parquet-backed versioned table with an Iceberg-style optimistic
   * snapshot-commit protocol — the local stand-in for the reference's
@@ -102,17 +100,10 @@ case class Snapshot(
   * iceberg runtime jar ships in /opt/spark/jars, so the table format is
   * hand-rolled on plain parquet + JSON metadata).
   *
-  * Layout:
-  * {{{
-  *   <location>/_meta/v<%05d>.json   one snapshot per committed version
-  *   <location>/data/<uuid>/...      immutable data dirs, never mutated
-  * }}}
-  *
-  * Commit = write data dirs, then claim `_meta/v<next>.json` with
-  * `FileSystem.create(overwrite=false)` — the atomic existence check is
-  * the commit point (HadoopTableOperations-style). A lost race throws
-  * `CommitConflictException`; ledger writers serialize with a JVM lock
-  * exactly like the reference (`watermark.py:16,193`).
+  * The commit protocol, the metadata layout and the manifest tree
+  * (snapshot JSON → immutable segment files) live in [[TableLog]]; this
+  * class runs the Spark side — DML, reads, maintenance and the
+  * metadata views — and commits through the log.
   *
   * Scale design:
   *  - append never touches existing data (new manifest = old ++ new);
@@ -126,403 +117,42 @@ case class Snapshot(
   *  - readers get plain parquet scans (vectorized, filter-pushdown,
   *    partition-pruned by Catalyst via the Hive dir layout).
   *
-  * Manifest tree (MEASURED by `graft.Probe <sf> manifest`, which grows a
-  * partitioned table to 10^5 entries through this public API):
-  * snapshot metadata is two-level, like Iceberg's manifest list →
-  * manifest files. The per-version JSON stores [[SegmentRef]]s into
-  * immutable segment files (`manifests/seg-*.json`, ~[[LakeTable.SegmentTargetEntries]]
-  * entries each); a commit reuses every parent segment whose entries
-  * all survive and serializes only the changed tail, so COMMIT
-  * METADATA COST IS O(changed entries), not O(table) — an append to a
-  * 10^5-entry table writes one small segment plus a KB-sized snapshot,
-  * where the pre-segment format re-wrote 24 MB of JSON every commit.
-  * Segment fanout is capped ([[LakeTable.MaxSegments]]) by folding
-  * small segments, Iceberg's min-count-to-merge; branches, publishes
-  * and rollbacks share segment files byte-for-byte (metadata-only even
-  * at 10^5 entries); expired/orphaned segments are swept behind a
-  * commit-window grace. Loads go through an immutable-segment LRU
-  * cache, so re-reads parse only fresh segments. Entries are per
-  * write-directory × partition (NOT per data file); any full rewrite
-  * ([[rewriteDataFiles]], clustering) collapses the manifest to
-  * O(current partitions). Remaining driver-side bound: PLANNING walks
-  * the materialized entry list in memory (~20 ms at 10^5, measured) —
-  * at 10^7+ entries real Iceberg additionally plans scans as a
-  * distributed job over manifest files; the segment files are the
-  * natural input for that job if it is ever needed.
+  * Entries are per write-directory × partition (NOT per data file); any
+  * full rewrite ([[rewriteDataFiles]], clustering) collapses the
+  * manifest to O(current partitions). Remaining driver-side bound:
+  * PLANNING walks the materialized entry list in memory (~20 ms at
+  * 10^5 entries, measured by `graft.Probe <sf> manifest`).
   */
 class LakeTable(
     val spark: SparkSession,
     val location: String,
     val name: String,
-    private val metaSubpath: String = "_meta") {
+    // the log of a branch handle (see [[branch]]); the table's own otherwise
+    branchLog: Option[TableLog] = None) {
 
   import LakeTable._
+  import TableLog.StampAtCommit
 
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  private val metaDir = new Path(s"$location/$metaSubpath")
-  private def fs: FileSystem = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs: FileSystem = new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private[graft] val log: TableLog = branchLog.getOrElse(TableLog.at(fs, location, name))
 
   // -------------------------------------------------------------------
   // metadata
   // -------------------------------------------------------------------
 
-  def exists: Boolean = fs.exists(metaDir) && currentVersion.isDefined
+  def exists: Boolean = log.headVersion.isDefined
 
-  private def currentVersion: Option[Long] =
-    if (!fs.exists(metaDir)) None
-    else {
-      val vs = fs.listStatus(metaDir).toSeq
-        .map(_.getPath.getName)
-        .collect { case VersionFileRe(v) => v.toLong }
-      if (vs.isEmpty) None else Some(vs.max)
-    }
+  def currentSnapshot: Option[Snapshot] = log.head
 
-  def currentSnapshot: Option[Snapshot] = currentVersion.map(readSnapshot)
+  def snapshot(version: Long): Snapshot = log.read(version)
 
-  def snapshot(version: Long): Snapshot = readSnapshot(version)
-
-  def schema: StructType = currentSnapshot
-    .getOrElse(throw new IllegalStateException(s"table $name does not exist"))
-    .schema
+  def schema: StructType = requireExists().schema
 
   def properties: Map[String, String] =
     currentSnapshot.map(_.properties).getOrElse(Map.empty)
-
-  private def parseEntry(e: com.fasterxml.jackson.databind.JsonNode): ManifestEntry = {
-    val stats = Option(e.get("stats")).filter(!_.isNull).map { sn =>
-      sn.fields().asScala.map { kv =>
-        kv.getKey -> (kv.getValue.get("min").asText(), kv.getValue.get("max").asText())
-      }.toMap
-    }.getOrElse(Map.empty[String, (String, String)])
-    ManifestEntry(
-      e.get("dir").asText(),
-      Option(e.get("partition")).filter(!_.isNull).map(_.asText()),
-      stats,
-      Option(e.get("seq")).filter(!_.isNull).map(_.asLong()).getOrElse(0L),
-      Option(e.get("blooms")).filter(!_.isNull)
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil))
-  }
-
-  private def parseSegmentRefs(n: com.fasterxml.jackson.databind.JsonNode): Option[Seq[SegmentRef]] =
-    Option(n.get("segments")).filter(!_.isNull).map(_.elements().asScala.map(e =>
-      SegmentRef(e.get("file").asText(), e.get("count").asInt())).toSeq)
-
-  /** Meta subpath of the ROOT lineage — segment files live there so
-    * branches/publishes can share them. */
-  private def rootMetaSubpath: String = {
-    val i = metaSubpath.indexOf("/branch-")
-    if (i < 0) metaSubpath else metaSubpath.substring(0, i)
-  }
-
-  private def manifestsDir = new Path(s"$location/$rootMetaSubpath/manifests")
-
-  /** Cache-through read of one immutable segment file. */
-  private def loadSegment(ref: SegmentRef): Seq[ManifestEntry] = {
-    val p = new Path(manifestsDir, ref.file)
-    segmentCache.getOrElseUpdate(p.toString) {
-      val in = fs.open(p)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      Mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-        .elements().asScala.map(parseEntry).toSeq
-    }
-  }
-
-  /** Write one immutable segment file (UUID-named — never contended;
-    * a lost commit's segments become unreferenced and are swept by
-    * maintenance). */
-  private def writeSegment(entries: Seq[ManifestEntry]): SegmentRef = {
-    val file = s"seg-${UUID.randomUUID()}.json"
-    val arr = Mapper.createArrayNode()
-    entries.foreach(putEntry(arr, _))
-    fs.mkdirs(manifestsDir)
-    val p = new Path(manifestsDir, file)
-    val out = fs.create(p, false)
-    try out.write(Mapper.writeValueAsBytes(arr)) finally out.close()
-    segmentCache.put(p.toString, entries)
-    SegmentRef(file, entries.size)
-  }
-
-  /** Segment references of a committed version (empty for pre-segment
-    * inline-entry snapshots) — a tiny JSON read, no entry parsing. */
-  private def readSegmentRefs(version: Long): Seq[SegmentRef] = {
-    val p = new Path(metaDir, f"v$version%05d.json")
-    if (!fs.exists(p)) return Nil
-    val in = fs.open(p)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    parseSegmentRefs(Mapper.readTree(new String(bytes, StandardCharsets.UTF_8)))
-      .getOrElse(Nil)
-  }
-
-  private def readSnapshot(version: Long): Snapshot = {
-    val p = new Path(metaDir, f"v$version%05d.json")
-    val in = fs.open(p)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val n = Mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-    def entriesOf(field: String): Seq[ManifestEntry] =
-      Option(n.get(field)).filter(!_.isNull).map(
-        _.elements().asScala.map(parseEntry).toSeq).getOrElse(Nil)
-    val entries = parseSegmentRefs(n) match {
-      case Some(refs) => refs.flatMap(loadSegment)
-      case None => entriesOf("entries") // pre-segment inline format
-    }
-    val deleteEntries = entriesOf("deleteEntries")
-    Snapshot(
-      version = n.get("version").asLong(),
-      parentVersion = Option(n.get("parent")).filter(!_.isNull).map(_.asLong()),
-      operation = n.get("operation").asText(),
-      timestampMs = n.get("timestampMs").asLong(),
-      schema = DataType.fromJson(n.get("schema").asText()).asInstanceOf[StructType],
-      partitionCols = n.get("partitionCols").elements().asScala.map(_.asText()).toSeq,
-      entries = entries,
-      properties = objToMap(n.get("properties").asInstanceOf[ObjectNode]),
-      summary = objToMap(n.get("summary").asInstanceOf[ObjectNode]),
-      deleteEntries = deleteEntries,
-      lastSequenceNumber = {
-        // back-compat: snapshots from before the counter stamped seqs
-        // with the commit VERSION (and publish could floor the version
-        // past imported seqs), so max(version, manifest seqs) is the
-        // exact value the counter would have recorded
-        val fromFile = Option(n.get("lastSequenceNumber")).filter(!_.isNull).map(_.asLong())
-        fromFile.getOrElse(
-          (n.get("version").asLong() +: (entries ++ deleteEntries).map(_.seq)).max)
-      })
-  }
-
-  private def putEntry(arr: com.fasterxml.jackson.databind.node.ArrayNode,
-      e: ManifestEntry): Unit = {
-    val en = arr.addObject()
-    en.put("dir", e.dir)
-    e.partition.fold[Unit](en.putNull("partition"))(p => { en.put("partition", p); () })
-    if (e.stats.nonEmpty) {
-      val sn = en.putObject("stats")
-      e.stats.foreach { case (c, (mn, mx)) =>
-        val cn = sn.putObject(c); cn.put("min", mn); cn.put("max", mx)
-      }
-    }
-    if (e.seq != 0L) en.put("seq", e.seq)
-    if (e.blooms.nonEmpty) {
-      val bn = en.putArray("blooms")
-      e.blooms.foreach(bn.add)
-    }
-  }
-
-  /** Segment layout for snapshot `s`: reuse every donor segment whose
-    * entries ALL survive into `s` (appends reuse the whole parent
-    * layout; a pruned COW rewrite reuses the untouched segments), write
-    * the rest into fresh target-sized segment files. When the layout
-    * would exceed the fanout cap, small segments fold together —
-    * Iceberg's `commit.manifest.min-count-to-merge` behavior — so
-    * segment-file count grows O(entries / target), never O(commits). */
-  private def segmentLayout(s: Snapshot, reuseRefs: Seq[SegmentRef]): Seq[SegmentRef] = {
-    val target = s.properties.get("manifest.target-segment-entries")
-      .map(_.toInt).getOrElse(SegmentTargetEntries)
-    val maxSegs = s.properties.get("manifest.max-segments")
-      .map(_.toInt).getOrElse(MaxSegments)
-    val remaining = scala.collection.mutable.HashSet.empty[ManifestEntry]
-    remaining ++= s.entries
-    // duplicate entries would double-claim through the set — fall back
-    // to a plain chunked write (never expected; correctness guard)
-    val reused: Seq[(SegmentRef, Seq[ManifestEntry])] =
-      if (remaining.size != s.entries.size) Nil
-      else reuseRefs.distinctBy(_.file).flatMap { r =>
-        // Donor liveness vs a racing segment sweep: (1) TOUCH the donor
-        // so the sweep's age guard re-protects it for a full grace
-        // window, then (2) verify it on disk even when its content is
-        // cached — a miss just rewrites fresh. The touch is the ONLY
-        // protection standing between the donor and a sweep whose stat
-        // predates this commit, so a FAILED touch (IOException, or an
-        // FS that doesn't support setTimes) must also skip reuse — the
-        // entries are rewritten into fresh segments rather than
-        // committing a reference the sweep may still delete. With the
-        // sweep re-checking mtime immediately before each delete, a
-        // dangling reference needs the sweep's stat→delete gap to
-        // straddle this touch→claim span — in practice: keep the gc
-        // grace above the longest-running commit, the same operational
-        // contract as Iceberg's remove_orphan_files retention.
-        val es = try {
-          val p = new Path(manifestsDir, r.file)
-          if (!fs.exists(p)) Nil
-          else {
-            fs.setTimes(p, System.currentTimeMillis(), -1)
-            loadSegment(r)
-          }
-        } catch { case scala.util.control.NonFatal(e) =>
-          // correctness-safe but costly if persistent (every commit then
-          // rewrites O(entries) segments instead of reusing) — say so,
-          // the same degraded-mode visibility Settings' vault fallback has
-          logger.warn(
-            s"segment donor ${r.file} not reused " +
-              s"(${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}); " +
-              "rewriting entries fresh")
-          Nil
-        }
-        if (es.nonEmpty && es.forall(remaining.contains)) {
-          es.foreach(remaining -= _)
-          Some(r -> es)
-        } else None
-      }
-    val leftover = s.entries.filter(remaining.contains)
-    val projected = reused.size + (leftover.size + target - 1) / target
-    if (projected <= maxSegs)
-      reused.map(_._1) ++ leftover.grouped(target).map(writeSegment)
-    else {
-      val (big, small) = reused.partition(_._2.size >= target / 2)
-      big.map(_._1) ++
-        (small.flatMap(_._2) ++ leftover).grouped(target).map(writeSegment)
-    }
-  }
-
-  private def writeSnapshot(s: Snapshot, reuseRefs: Seq[SegmentRef] = Nil): Unit = {
-    val n = Mapper.createObjectNode()
-    n.put("version", s.version)
-    s.parentVersion.fold[Unit](n.putNull("parent"))(v => { n.put("parent", v); () })
-    n.put("operation", s.operation)
-    n.put("timestampMs", s.timestampMs)
-    n.put("lastSequenceNumber", s.lastSequenceNumber)
-    n.put("schema", s.schema.json)
-    val pc = n.putArray("partitionCols"); s.partitionCols.foreach(pc.add)
-    // entries live in immutable segment files; the snapshot stores refs
-    val segArr = n.putArray("segments")
-    StoreTiming.time("meta.segment-layout")(segmentLayout(s, reuseRefs)).foreach { r =>
-      val o = segArr.addObject(); o.put("file", r.file); o.put("count", r.count); ()
-    }
-    // outstanding MoR delete files stay inline: their count is bounded
-    // by position-delete compaction, and their seq numbers change
-    // relative to readers too often to be worth segment reuse
-    if (s.deleteEntries.nonEmpty) {
-      val arr = n.putArray("deleteEntries")
-      s.deleteEntries.foreach(putEntry(arr, _))
-    }
-    val props = n.putObject("properties"); s.properties.foreach { case (k, v) => props.put(k, v) }
-    val sum = n.putObject("summary"); s.summary.foreach { case (k, v) => sum.put(k, v) }
-
-    val target = new Path(metaDir, f"v${s.version}%05d.json")
-    StoreTiming.time("meta.snapshot-io") {
-      fs.mkdirs(metaDir)
-      // Commit point: fully write a hidden temp file, then atomically claim
-      // the version file — readers never observe partial metadata (the temp
-      // name is filtered by VersionFileRe) and exactly one writer wins each
-      // version — the same protocol as Iceberg's HadoopTableOperations.
-      val tmp = new Path(metaDir, s".tmp-${UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(Mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-      finally out.close()
-      val claimed = claimFile(tmp, target)
-      fs.delete(tmp, false)
-      if (!claimed)
-        throw new CommitConflictException(s"concurrent commit on $name v${s.version}", null)
-    }
-  }
-
-  /** Atomic no-overwrite claim of `target` from a fully-written `tmp`.
-    * On local FS the claim is a hard-link creation (atomic, fails if the
-    * target exists; plain rename is exists-check-then-move through
-    * ChecksumFileSystem and can interleave). On HDFS-like schemes rename
-    * itself is atomic-no-overwrite. Exactly one claimant wins. */
-  private def claimFile(tmp: Path, target: Path): Boolean =
-    if (fs.getScheme == "file") {
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(target.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    } else fs.rename(tmp, target)
-
-  /** Optimistic commit. `retries > 0` is only safe for ADDITIVE builds
-    * (append, ledger insert, MoR merge/delete): `buildEntries` re-runs
-    * against the fresh parent after a lost race, so the new manifest is
-    * rebuilt on top of the winner. Rewriting commits (COW merge/delete,
-    * compaction) instead pass `requireParentVersion` — the snapshot
-    * version their rewrite READ — and the commit throws
-    * `CommitConflictException` when the table has moved past it, like
-    * Iceberg's base-snapshot validation: without the check a racer's
-    * commit landing between the read and the claim would be silently
-    * overwritten by the stale rewrite (lost update), because the claim
-    * targets the FRESH head's successor version and succeeds. Replace-
-    * semantics ops (create-or-replace, overwrite, rollback) skip the
-    * check by design — clobbering the head is what they mean. Retry
-    * bounds mirror the reference's contended ledger tableProperties
-    * (`watermark.py:58-60`): commit.retry.num-retries=20,
-    * commit.retry.min-wait-ms=200. */
-  private def commit(
-      operation: String,
-      retries: Int = 0,
-      retryWaitMs: Long = 200,
-      parentOverride: Option[Long] = None,
-      requireParentVersion: Option[Long] = None,
-      // merge-on-read delete files: default carries the parent's
-      // outstanding deletes forward (COW commits never touch them);
-      // MoR writers append, position-delete compaction clears
-      deleteEntriesFn: Option[Snapshot] => Seq[ManifestEntry] =
-        p => p.map(_.deleteEntries).getOrElse(Nil),
-      // segment files beyond the parent's that this commit's entries may
-      // be reusable from (a publish donates the branch head's segments,
-      // a rollback the restored version's)
-      extraReuseRefs: Seq[SegmentRef] = Nil)(
-      buildEntries: Option[Snapshot] => (StructType, Seq[String], Seq[ManifestEntry], Map[String, String], Map[String, String])): Snapshot =
-    synchronized {
-      var attempt = 0
-      var result: Snapshot = null
-      while (result == null) {
-        val parent = currentSnapshot
-        requireParentVersion.foreach { v =>
-          if (!parent.exists(_.version == v))
-            throw new CommitConflictException(
-              s"$operation on $name read v$v but the table is at " +
-                s"v${parent.map(_.version).getOrElse(0L)} — a concurrent " +
-                "commit may have changed rows this rewrite read", null)
-        }
-        val (sch, pcols, entries, props, summary) =
-          StoreTiming.time("commit.build-entries")(buildEntries(parent))
-        // versions are STRICTLY CONTIGUOUS (parent+1, never floored):
-        // the claim-file protocol serializes writers only when every
-        // commit targets the head's immediate successor — a version gap
-        // would let a concurrent additive writer claim the gap file
-        // "successfully" while currentVersion (max) ignores it, silently
-        // orphaning an acknowledged commit
-        val version = parent.map(_.version + 1).getOrElse(1L)
-        // freshly-written entries carry the StampAtCommit sentinel —
-        // their data sequence number comes from the monotonic counter,
-        // NOT the version (a publish may import higher branch seqs)
-        val commitSeq = parent.map(_.lastSequenceNumber).getOrElse(0L) + 1
-        def stamp(es: Seq[ManifestEntry]) =
-          es.map(e => if (e.seq == StampAtCommit) e.copy(seq = commitSeq) else e)
-        val stampedEntries = stamp(entries)
-        val stampedDeletes = stamp(deleteEntriesFn(parent))
-        val snap = Snapshot(
-          version = version,
-          // a rollback re-parents onto the RESTORED version so the
-          // rolled-back commits leave the ancestry chain
-          parentVersion = parentOverride.orElse(parent.map(_.version)),
-          operation = operation,
-          timestampMs = System.currentTimeMillis(),
-          schema = sch,
-          partitionCols = pcols,
-          entries = stampedEntries,
-          properties = props,
-          summary = summary,
-          deleteEntries = stampedDeletes,
-          // counter covers every seq reachable from this snapshot, so a
-          // future delete file always sequences strictly above imported
-          // branch entries too (the old versionFloor invariant, kept
-          // without breaking version contiguity)
-          lastSequenceNumber =
-            (commitSeq +: (stampedEntries ++ stampedDeletes).map(_.seq)).max)
-        try {
-          writeSnapshot(snap,
-            parent.map(p => readSegmentRefs(p.version)).getOrElse(Nil) ++ extraReuseRefs)
-          result = snap
-        } catch {
-          case e: CommitConflictException =>
-            attempt += 1
-            if (attempt > retries) throw e
-            Thread.sleep(retryWaitMs)
-        }
-      }
-      result
-    }
 
   // -------------------------------------------------------------------
   // data IO
@@ -982,8 +612,7 @@ class LakeTable(
   /** Current table contents as a plain parquet-backed DataFrame
     * (merge-on-read delete files, if any, applied). */
   def read: DataFrame = {
-    val s = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"table $name does not exist"))
+    val s = requireExists()
     morRead(s, s.entries)
   }
 
@@ -1001,8 +630,7 @@ class LakeTable(
     * record how much the stats+bloom pruning actually cut without
     * running the pruning walk — and its sidecar loads — twice. */
   private[graft] def readWhereCounted(cond: Column): (DataFrame, Int, Int) = {
-    val s = currentSnapshot.getOrElse(
-      throw new IllegalStateException(s"table $name does not exist"))
+    val s = requireExists()
     val entries = prunedEntries(s, cond)
     (morRead(s, entries).filter(cond), entries.size, s.entries.size)
   }
@@ -1118,7 +746,7 @@ class LakeTable(
   /** Time travel: read the table AS OF a committed version (Iceberg's
     * `VERSION AS OF` — snapshots stay readable until expireSnapshots). */
   def readVersion(version: Long): DataFrame = {
-    val s = readSnapshot(version)
+    val s = log.read(version)
     morRead(s, s.entries)
   }
 
@@ -1129,7 +757,7 @@ class LakeTable(
     * claim time; ties resolve to the highest version. Fails like
     * Iceberg when the timestamp predates the first retained snapshot. */
   def readAsOf(timestampMs: Long): DataFrame = {
-    val candidates = allSnapshots.filter(_.timestampMs <= timestampMs)
+    val candidates = log.all.filter(_.timestampMs <= timestampMs)
     if (candidates.isEmpty)
       throw new IllegalStateException(
         s"no snapshot of $name committed at or before $timestampMs " +
@@ -1162,7 +790,7 @@ class LakeTable(
     // one metadata pass: every retained snapshot, indexed by version —
     // the ancestry walk and the entry diffs below resolve from this map
     // instead of re-opening snapshot files
-    val all = allSnapshots
+    val all = log.all
     if (all.isEmpty) throw new IllegalStateException(s"table $name does not exist")
     val byVersion = all.map(s => s.version -> s).toMap
     def expired(v: Long, role: String): Nothing =
@@ -1268,11 +896,11 @@ class LakeTable(
   def removedChanges(fromVersion: Long, toVersion: Option[Long] = None): DataFrame = {
     val cur = requireExists()
     val hiSnap = toVersion.filter(_ != cur.version)
-      .map(readSnapshot).getOrElse(cur)
+      .map(log.read).getOrElse(cur)
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], hiSnap.schema)
     if (hiSnap.deleteEntries.isEmpty) return empty
-    val fromSnap = readSnapshot(fromVersion)
+    val fromSnap = log.read(fromVersion)
     val oldDels = fromSnap.deleteEntries
     val oldDirs = oldDels.map(_.dir).toSet
     val newDels = hiSnap.deleteEntries.filterNot(d => oldDirs(d.dir))
@@ -1321,7 +949,7 @@ class LakeTable(
     // replace semantics: the parent's outstanding MoR delete files are
     // meaningless for the replacement data (and the fresh properties
     // map may not carry mor.delete-keys) — drop them
-    commit("create-or-replace", deleteEntriesFn = _ => Nil)(_ =>
+    log.commit("create-or-replace", deleteEntriesFn = _ => Nil)(_ =>
       (df.schema, pcols, entries, props, Map.empty))
   }
 
@@ -1342,7 +970,7 @@ class LakeTable(
     val s = requireExists()
     val (_, entries) = writeData(prepared(df, s), s.partitionCols, s.properties)
     val (retries, waitMs) = retryConfig(s)
-    commit("append", retries, waitMs)(p =>
+    log.commit("append", retries, waitMs)(p =>
       (p.get.schema, p.get.partitionCols, p.get.entries ++ entries,
         p.get.properties ++ extraProperties,
         Map("added-entries" -> entries.size.toString)))
@@ -1376,7 +1004,7 @@ class LakeTable(
     val withBucket = bucketSpec(s).map(withDerivedBucket(conformed, _)).getOrElse(conformed)
     val (_, entries) = writeData(withBucket, s.partitionCols, s.properties)
     val (retries, waitMs) = retryConfig(s)
-    commit("append-evolve", retries, waitMs)(p =>
+    log.commit("append-evolve", retries, waitMs)(p =>
       // re-merge against the FRESH parent so a racer's evolution survives
       (mergedSchema(p.get.schema, df.schema), p.get.partitionCols,
         p.get.entries ++ entries, p.get.properties,
@@ -1389,7 +1017,7 @@ class LakeTable(
   def overwrite(df: DataFrame): Snapshot = {
     val s = requireExists()
     val (_, entries) = writeData(prepared(df, s), s.partitionCols, s.properties)
-    commit("overwrite", deleteEntriesFn = _ => Nil)(_ =>
+    log.commit("overwrite", deleteEntriesFn = _ => Nil)(_ =>
       (s.schema, s.partitionCols, entries, s.properties, Map.empty))
   }
 
@@ -1424,7 +1052,7 @@ class LakeTable(
     val out = graft.operators.Merge.upsert(conformTo(read), conformTo(source), keys)
     val withBucket = bucketSpec(s).map(withDerivedBucket(out, _)).getOrElse(out)
     val (_, entries) = writeData(withBucket, s.partitionCols, s.properties)
-    commit("merge-evolve", requireParentVersion = Some(s.version),
+    log.commit("merge-evolve", requireParentVersion = Some(s.version),
       deleteEntriesFn = _ => Nil)(_ =>
       (widened, s.partitionCols, entries, s.properties,
         Map("added-columns" ->
@@ -1466,7 +1094,7 @@ class LakeTable(
         .getOrElse(col(f.name))
     }.toIndexedSeq: _*)
     val (_, entries) = writeData(prepared(updated, s), s.partitionCols, s.properties)
-    commit("update", requireParentVersion = Some(s.version))(_ =>
+    log.commit("update", requireParentVersion = Some(s.version))(_ =>
       (s.schema, s.partitionCols, untouched ++ entries, s.properties,
         Map(
           "rewritten-entries" -> affected.size.toString,
@@ -1505,7 +1133,7 @@ class LakeTable(
       (for (c <- newProps.get("bucket.column"); n <- newProps.get("bucket.count"))
         yield withDerivedBucket(conformed, (c, n.toInt))).getOrElse(conformed)
     val (_, entries) = writeData(withBucket, newPcols, newProps)
-    commit("rename-column", requireParentVersion = Some(s.version),
+    log.commit("rename-column", requireParentVersion = Some(s.version),
       deleteEntriesFn = _ => Nil)(_ =>
       (newSchema, newPcols, entries, newProps,
         Map("renamed-column" -> s"$from -> $to")))
@@ -1542,7 +1170,7 @@ class LakeTable(
       s"cannot promote bucket column '$colName' (bucket hashes are type-sensitive)")
     val newSchema = StructType(s.schema.fields.map(x =>
       if (x.name == colName) x.copy(dataType = newType) else x))
-    commit("alter-column-type", requireParentVersion = Some(s.version))(p =>
+    log.commit("alter-column-type", requireParentVersion = Some(s.version))(p =>
       (newSchema, s.partitionCols, p.get.entries, s.properties,
         Map("altered-column" -> colName,
           "from-type" -> f.dataType.catalogString,
@@ -1573,7 +1201,7 @@ class LakeTable(
     * manifest diffing cannot give row-level images, so two reads is the
     * irreducible price of pre/post rows. */
   def changelog(fromVersion: Long, toVersion: Long, keys: Seq[String]): DataFrame = {
-    val postSnap = readSnapshot(toVersion)
+    val postSnap = log.read(toVersion)
     val postT = morRead(postSnap, postSnap.entries)
     // schema may have EVOLVED inside the range: null-backfill the pre
     // side to the post schema (same rule as the incremental scan)
@@ -1614,14 +1242,14 @@ class LakeTable(
     * Metadata-only: no data is copied or rewritten. */
   def rollbackTo(version: Long): Snapshot = {
     val target =
-      try readSnapshot(version)
+      try log.read(version)
       catch { case e: java.io.FileNotFoundException =>
         throw new IllegalArgumentException(
           s"cannot roll back $name to v$version: no such snapshot", e)
       }
-    commit("rollback", parentOverride = Some(version),
+    log.commit("rollback", parentOverride = Some(version),
       deleteEntriesFn = _ => target.deleteEntries,
-      extraReuseRefs = readSegmentRefs(version))(_ =>
+      extraReuseRefs = target.segments)(_ =>
       (target.schema, target.partitionCols, target.entries, target.properties,
         Map("rolled-back-to" -> version.toString)))
   }
@@ -1634,7 +1262,7 @@ class LakeTable(
     val (retries, waitMs) = retryConfig(s)
     // additive over the FRESH snapshot, so two racing setProperties on
     // different keys both land and a racer's schema evolution survives
-    commit("set-properties", retries, waitMs)(p =>
+    log.commit("set-properties", retries, waitMs)(p =>
       (p.get.schema, p.get.partitionCols, p.get.entries,
         p.get.properties ++ updates,
         Map("updated-keys" -> updates.keys.mkString(","))))
@@ -1650,7 +1278,7 @@ class LakeTable(
   def removeProperties(keys: Seq[String]): Snapshot = {
     val s = requireExists()
     val (retries, waitMs) = retryConfig(s)
-    commit("remove-properties", retries, waitMs)(p =>
+    log.commit("remove-properties", retries, waitMs)(p =>
       (p.get.schema, p.get.partitionCols, p.get.entries,
         p.get.properties -- keys,
         Map("removed-keys" -> keys.mkString(","))))
@@ -1667,7 +1295,7 @@ class LakeTable(
   def removePropertiesIfUnchanged(expected: Map[String, String]): Snapshot = {
     val s = requireExists()
     val (retries, waitMs) = retryConfig(s)
-    commit("remove-properties", retries, waitMs) { p =>
+    log.commit("remove-properties", retries, waitMs) { p =>
       val props = p.get.properties
       val removable = expected.keysIterator
         .filter(k => props.get(k) == expected.get(k)).toSeq.sorted
@@ -1697,7 +1325,7 @@ class LakeTable(
       s"duplicate partition columns: ${newPartitionCols.mkString(",")}")
     newPartitionCols.foreach(c =>
       require(s.schema.fieldNames.contains(c), s"no such column: $c"))
-    commit("update-partition-spec", requireParentVersion = Some(s.version))(_ =>
+    log.commit("update-partition-spec", requireParentVersion = Some(s.version))(_ =>
       (s.schema, newPartitionCols, s.entries, s.properties,
         Map("partition-spec" ->
           (if (newPartitionCols.isEmpty) "(unpartitioned)"
@@ -1708,7 +1336,7 @@ class LakeTable(
   def deleteWhere(cond: Column): Snapshot = {
     val s = requireExists()
     val (_, entries) = writeData(prepared(read.filter(not(cond)), s), s.partitionCols, s.properties)
-    commit("delete", requireParentVersion = Some(s.version),
+    log.commit("delete", requireParentVersion = Some(s.version),
       deleteEntriesFn = _ => Nil)(_ =>
       (s.schema, s.partitionCols, entries, s.properties, Map.empty))
   }
@@ -1778,7 +1406,7 @@ class LakeTable(
       if (updated.isEmpty) return s
       val (_, dataEntries) = writeData(prepared(updated, s), s.partitionCols, s.properties)
       val delEntry = writeDeleteFile(updated, keys, s)
-      commit("update-mor", requireParentVersion = Some(s.version),
+      log.commit("update-mor", requireParentVersion = Some(s.version),
         deleteEntriesFn = p => p.map(_.deleteEntries).getOrElse(Nil) :+ delEntry)(_ =>
         (s.schema, s.partitionCols, s.entries ++ dataEntries, s.properties,
           Map("added-entries" -> dataEntries.size.toString, "delete-files" -> "1")))
@@ -1840,7 +1468,7 @@ class LakeTable(
     // against the FRESH parent: a racing first MoR write may have fixed
     // different keys, and our delete file would not carry them
     val (retries, waitMs) = retryConfig(s)
-    commit("merge-mor", retries, waitMs,
+    log.commit("merge-mor", retries, waitMs,
       deleteEntriesFn = p => p.map(_.deleteEntries).getOrElse(Nil) :+ delEntry)(p => {
       requireMorKeys(p.get, keys)
       (p.get.schema, p.get.partitionCols, p.get.entries ++ dataEntries,
@@ -1858,7 +1486,7 @@ class LakeTable(
     // additive like mergeIntoMoR: only a delete file lands, so lost
     // races rebuild on the fresh parent (keys re-validated) and retry
     val (retries, waitMs) = retryConfig(s)
-    commit("delete-mor", retries, waitMs,
+    log.commit("delete-mor", retries, waitMs,
       deleteEntriesFn = p => p.map(_.deleteEntries).getOrElse(Nil) :+ delEntry)(p => {
       requireMorKeys(p.get, keys)
       (p.get.schema, p.get.partitionCols, p.get.entries,
@@ -2089,7 +1717,7 @@ class LakeTable(
     val newEntries =
       if (affected.isEmpty) Nil
       else writeData(prepared(morRead(s, affected), s), s.partitionCols, s.properties)._2
-    commit("rewrite-position-deletes", requireParentVersion = Some(s.version),
+    log.commit("rewrite-position-deletes", requireParentVersion = Some(s.version),
       deleteEntriesFn = _ => Nil)(_ =>
       (s.schema, s.partitionCols, untouched ++ newEntries, s.properties,
         Map(
@@ -2303,7 +1931,7 @@ class LakeTable(
     // new sequence number lifts it above every outstanding delete
     val out = rewrite(morRead(s, affected), source)
     val (_, newEntries) = writeData(prepared(out, s), s.partitionCols, s.properties)
-    commit(op, requireParentVersion = Some(s.version))(_ =>
+    log.commit(op, requireParentVersion = Some(s.version))(_ =>
       (s.schema, s.partitionCols, untouched ++ newEntries, s.properties ++ extraProps,
         Map(
           "prune-mode" -> mode,
@@ -2392,9 +2020,9 @@ class LakeTable(
 
   def history: DataFrame = {
     import spark.implicits._
-    allSnapshots
-      .map(s => (s.version, new java.sql.Timestamp(s.timestampMs),
-        s.parentVersion.getOrElse(-1L), s.version == currentVersion.getOrElse(-1L)))
+    val all = log.all
+    all.map(s => (s.version, new java.sql.Timestamp(s.timestampMs),
+        s.parentVersion.getOrElse(-1L), s.version == all.last.version))
       .toDF("version", "made_current_at", "parent_id", "is_current")
   }
 
@@ -2405,13 +2033,13 @@ class LakeTable(
     * cost a local collect job per refresh, which dominates wall time in
     * lifecycle-dense pipelines (many small commits, tiny data). */
   def operationsBetween(sinceV: Long, untilV: Long): Seq[String] =
-    allSnapshots
+    log.all
       .filter(s => s.version > sinceV && s.version <= untilV)
       .map(_.operation)
 
   def snapshotsDF: DataFrame = {
     import spark.implicits._
-    allSnapshots
+    log.all
       .map(s => (s.version, new java.sql.Timestamp(s.timestampMs), s.operation,
         s.entries.size.toLong, s.summary.map { case (k, v) => s"$k=$v" }.mkString(",")))
       .toDF("version", "committed_at", "operation", "entry_count", "summary")
@@ -2426,9 +2054,9 @@ class LakeTable(
   def manifestsDF: DataFrame = {
     import spark.implicits._
     val s = requireExists()
-    readSegmentRefs(s.version).map { r =>
-      val es = loadSegment(r)
-      val p = new Path(manifestsDir, r.file)
+    s.segments.map { r =>
+      val es = log.loadSegment(r)
+      val p = new Path(log.segmentDir, r.file)
       (p.toString, r.count.toLong, fs.getFileStatus(p).getLen,
         if (es.isEmpty) 0L else es.map(_.seq).min,
         if (es.isEmpty) 0L else es.map(_.seq).max)
@@ -2461,20 +2089,9 @@ class LakeTable(
   def filesDF: DataFrame = {
     import spark.implicits._
     val s = requireExists()
-    def list(es: Seq[ManifestEntry], content: Int) = es.flatMap { e =>
-      val p = new Path(e.dataPath(location))
-      if (!fs.exists(p)) Nil
-      else {
-        val it = fs.listFiles(p, true)
-        val buf = scala.collection.mutable.ArrayBuffer[(String, String, Long, Int)]()
-        while (it.hasNext) {
-          val f = it.next()
-          if (f.getPath.getName.endsWith(".parquet"))
-            buf += ((f.getPath.toString, e.partition.getOrElse(""), f.getLen, content))
-        }
-        buf.toSeq
-      }
-    }
+    def list(es: Seq[ManifestEntry], content: Int) = es.flatMap(e =>
+      parquetFiles(new Path(e.dataPath(location))).map(f =>
+        (f.getPath.toString, e.partition.getOrElse(""), f.getLen, content)))
     (list(s.entries, 0) ++ list(s.deleteEntries, 2))
       .toDF("file_path", "partition", "file_size_bytes", "content")
   }
@@ -2502,148 +2119,39 @@ class LakeTable(
     (main +: (branches ++ tagRows)).toDF("name", "type", "version")
   }
 
-  private def versionsOnDisk: Seq[Long] =
-    if (!fs.exists(metaDir)) Nil
-    else fs.listStatus(metaDir).toSeq
-      .map(_.getPath.getName)
-      .collect { case VersionFileRe(v) => v.toLong }
-      .sorted
-
-  private def allSnapshots: Seq[Snapshot] = versionsOnDisk.map(readSnapshot)
-
-  /** Delete segment files that no retained snapshot of ANY lineage in
-    * the ref tree references and that are older than `olderThanMs`. The
-    * age guard covers the commit window: a concurrent writer's
-    * freshly-written segments are not referenced until its snapshot
-    * claim lands, exactly like Iceberg's orphan-file grace. */
-  private def sweepSegments(olderThanMs: Long): Int = {
-    if (!fs.exists(manifestsDir)) return 0
-    val referenced = lineages.flatMap(t =>
-      t.versionsOnDisk.flatMap(t.readSegmentRefs)).map(_.file).toSet
-    val victims = fs.listStatus(manifestsDir).toSeq.filter(st =>
-      !referenced(st.getPath.getName) && st.getModificationTime < olderThanMs)
-    // re-stat immediately before each delete: a committing writer
-    // re-touches donor segments it is about to reference, so a fresh
-    // mtime here means the file came back into (imminent) use
-    victims.count { st =>
-      val live = try fs.getFileStatus(st.getPath).getModificationTime >= olderThanMs
-        catch { case _: java.io.IOException => true } // vanished/unreadable: skip
-      if (!live) fs.delete(st.getPath, false) else false
-    }
-  }
-
   // -------------------------------------------------------------------
   // refs: tags + branches (Iceberg named references / write-audit-publish)
   // -------------------------------------------------------------------
 
-  private def legacyTagsPath = new Path(metaDir, "tags.json")
-
-  private def tagsVersions: Seq[Long] =
-    if (!fs.exists(metaDir)) Nil
-    else fs.listStatus(metaDir).toSeq
-      .map(_.getPath.getName)
-      .collect { case TagsFileRe(v) => v.toLong }
-      .sorted
-
-  private def tagsFile(v: Long) = new Path(metaDir, f"tags-v$v%05d.json")
-
   /** Named tags: immutable pointers to committed versions (Iceberg
     * `ALTER TABLE ... CREATE TAG`). Tagged versions survive
-    * `expireSnapshots` until the tag is dropped.
-    *
-    * The tags map lives in a VERSIONED file (`tags-v<n>.json`) claimed
-    * with the same atomic no-overwrite protocol as snapshot commits:
-    * readers always observe a complete file (no delete-then-rename
-    * window in which tag pins vanish and a racing expire could collect
-    * tagged snapshots), and concurrent writers on separate instances
-    * retry their read-modify-write instead of silently losing tags. */
-  def tags: Map[String, Long] = {
-    def readAt(p: Path): Map[String, Long] = {
-      val in = fs.open(p)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      val n = Mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-      n.properties().iterator().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-    }
-    def attempt(triesLeft: Int): Map[String, Long] =
-      tagsVersions.lastOption match {
-        case Some(v) =>
-          // the newest file may be cleaned up between list and open by a
-          // racing writer's post-claim sweep — re-list and retry
-          try readAt(tagsFile(v))
-          catch { case e: java.io.FileNotFoundException =>
-            if (triesLeft > 0) attempt(triesLeft - 1) else throw e
-          }
-        case None =>
-          if (fs.exists(legacyTagsPath)) readAt(legacyTagsPath) else Map.empty
-      }
-    // retries sized with the writer-side retention window: each retry
-    // re-lists, so only > TagGenerationsRetained consecutive claims
-    // landing inside ONE open attempt could outrun a reader
-    attempt(6)
-  }
+    * `expireSnapshots` until the tag is dropped. */
+  def tags: Map[String, Long] = log.tags
 
   def createTag(tag: String, version: Option[Long] = None): Unit = synchronized {
     val v = version.getOrElse(requireExists().version)
-    try readSnapshot(v)
+    try log.read(v)
     catch { case e: java.io.FileNotFoundException =>
       throw new IllegalArgumentException(s"cannot tag $name v$v: no such snapshot", e)
     }
-    mutateTags(_ + (tag -> v))
+    log.updateTags(_ + (tag -> v))
   }
 
-  def dropTag(tag: String): Unit = synchronized { mutateTags(_ - tag) }
+  def dropTag(tag: String): Unit = synchronized { log.updateTags(_ - tag) }
 
   /** Read the table AS OF the tagged snapshot (`VERSION AS OF 'tag'`). */
   def readTag(tag: String): DataFrame =
     readVersion(tags.getOrElse(tag,
       throw new IllegalArgumentException(s"no tag '$tag' on $name")))
 
-  /** Read-modify-write of the tags map via an atomic claim of the next
-    * `tags-v<n>.json`. A lost claim means another writer advanced the
-    * map — re-read and re-apply `f` (bounded retries). Superseded files
-    * more than [[LakeTable.TagGenerationsRetained]] generations old are
-    * swept best-effort; the retained window stays so an in-flight
-    * reader that listed before this claim still finds its file even
-    * when several writers land back-to-back while it opens — the
-    * reader's bounded re-list retries can only be outrun if MORE than
-    * retained-window consecutive claims fit inside one open attempt,
-    * and each retry re-lists the newest generation. */
-  private def mutateTags(f: Map[String, Long] => Map[String, Long]): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val next = tagsVersions.lastOption.getOrElse(0L) + 1
-      val n = Mapper.createObjectNode()
-      f(tags).foreach { case (k, v) => n.put(k, v) }
-      fs.mkdirs(metaDir)
-      val tmp = new Path(metaDir, s".tmp-tags-${UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
-      try out.write(Mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(n))
-      finally out.close()
-      val claimed = claimFile(tmp, tagsFile(next))
-      fs.delete(tmp, false)
-      if (claimed) {
-        tagsVersions.filter(_ < next - TagGenerationsRetained)
-          .foreach(v => try fs.delete(tagsFile(v), false) catch { case _: java.io.IOException => () })
-        try fs.delete(legacyTagsPath, false) catch { case _: java.io.IOException => () }
-        done = true
-      } else {
-        attempt += 1
-        if (attempt > 20)
-          throw new CommitConflictException(s"concurrent tag writes on $name", null)
-      }
-    }
-  }
-
-  /** View of branch `b`: its own snapshot lineage under
-    * `<meta>/branch-<b>/`, SHARING the table's immutable data dirs —
-    * every LakeTable operation (append, merge, compaction, time travel)
-    * works on the branch without copying data, exactly like Iceberg
-    * branches. Create with [[createBranch]]; publish with
-    * [[fastForward]]. */
+  /** View of branch `b`: its own snapshot lineage, SHARING the table's
+    * immutable data dirs — every LakeTable operation (append, merge,
+    * compaction, time travel) works on the branch without copying data,
+    * exactly like Iceberg branches. Create with [[createBranch]];
+    * publish with [[fastForward]]. */
   def branch(b: String): LakeTable = {
     require(b.matches("[A-Za-z0-9_-]+"), s"invalid branch name: $b")
-    new LakeTable(spark, location, s"$name@$b", s"$metaSubpath/branch-$b")
+    new LakeTable(spark, location, s"$name@$b", Some(log.branch(b)))
   }
 
   /** Fork branch `b` at the current version: the branch head starts as a
@@ -2655,48 +2163,20 @@ class LakeTable(
     val head = requireExists()
     val bt = branch(b)
     require(!bt.exists, s"branch $b already exists on $name")
-    // the fork reuses main's segment files verbatim (shared root
-    // manifests dir) — branching is metadata-only even at 10^5 entries
-    bt.writeSnapshot(head.copy(
-      operation = "fork",
-      summary = Map("forked-from" -> name, "fork-version" -> head.version.toString)),
-      readSegmentRefs(head.version))
-    // Persist the fork point OUTSIDE the snapshot lineage: branch-side
-    // expireSnapshots may legitimately drop the fork snapshot itself,
-    // and fastForward's publish gate must not depend on which snapshots
-    // the branch happened to retain.
-    bt.writeForkVersion(head.version)
+    bt.log.fork(head, Map("forked-from" -> name, "fork-version" -> head.version.toString))
     bt
   }
 
-  private def forkPath = new Path(metaDir, "fork.json")
-
-  private def writeForkVersion(v: Long): Unit = {
-    val out = fs.create(forkPath, true)
-    try out.write(s"""{"fork-version":$v}""".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+  /** Fork point of this BRANCH handle, durable against branch-side
+    * snapshot expiry. Branches created before the fork record existed
+    * fall back to the oldest retained snapshot's fork-version summary. */
+  private def forkVersion: Long = log.forkVersion.getOrElse {
+    val oldest = log.all.headOption.getOrElse(
+      throw new IllegalStateException(s"branch $name does not exist"))
+    oldest.summary.get("fork-version").map(_.toLong).getOrElse(oldest.version)
   }
 
-  /** Fork point of this BRANCH handle, durable against branch-side
-    * snapshot expiry. Branches created before fork.json existed fall
-    * back to the oldest retained snapshot's fork-version summary. */
-  private def forkVersion: Long =
-    if (fs.exists(forkPath)) {
-      val in = fs.open(forkPath)
-      val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-      Mapper.readTree(new String(bytes, StandardCharsets.UTF_8)).get("fork-version").asLong()
-    } else {
-      val oldest = allSnapshots.headOption.getOrElse(
-        throw new IllegalStateException(s"branch $name does not exist"))
-      oldest.summary.get("fork-version").map(_.toLong).getOrElse(oldest.version)
-    }
-
-  def listBranches: Seq[String] =
-    if (!fs.exists(metaDir)) Nil
-    else fs.listStatus(metaDir).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("branch-"))
-      .map(_.getPath.getName.stripPrefix("branch-"))
-      .sorted
+  def listBranches: Seq[String] = log.branches
 
   /** Publish branch `b`: commit its head state to main as one "publish"
     * snapshot (Iceberg `fast_forward`). Requires main to still be at the
@@ -2706,7 +2186,7 @@ class LakeTable(
   def fastForward(b: String): Snapshot = synchronized {
     val bt = branch(b)
     val bHead = bt.requireExists()
-    // the DURABLE fork point, not bt.allSnapshots.head: after a
+    // the DURABLE fork point, not bt.log.all.head: after a
     // branch-side expireSnapshots the oldest retained snapshot is an
     // arbitrary branch version, and comparing main against it would
     // spuriously block (or, on a version-number coincidence, silently
@@ -2725,9 +2205,9 @@ class LakeTable(
     // later main-side delete still sequences strictly above every
     // published row — and the published version stays exactly forkV+1
     // (contiguous), keeping the claim-file serialization intact
-    else commit("publish", requireParentVersion = Some(forkV),
+    else log.commit("publish", requireParentVersion = Some(forkV),
       deleteEntriesFn = _ => bHead.deleteEntries,
-      extraReuseRefs = bt.readSegmentRefs(bHead.version))(_ =>
+      extraReuseRefs = bHead.segments)(_ =>
       (bHead.schema, bHead.partitionCols, bHead.entries, bHead.properties,
         Map("branch" -> b, "branch-version" -> bHead.version.toString)))
   }
@@ -2751,7 +2231,7 @@ class LakeTable(
     val bt = branch(b)
     val bHead = bt.requireExists()
     val forkV = bt.forkVersion
-    val lineage = bt.allSnapshots.filter(_.version >= forkV).sortBy(_.version)
+    val lineage = bt.log.all.filter(_.version >= forkV).sortBy(_.version)
     // CONTIGUOUS retention required, not just the fork itself: with the
     // fork pinned (e.g. tagged) while expiry dropped an intermediate
     // snapshot, a rewrite commit could hide in the gap — its rewritten
@@ -2774,8 +2254,8 @@ class LakeTable(
     val added = bHead.entries.filterNot(e => forkKeys((e.dir, e.partition)))
       .map(_.copy(seq = StampAtCommit))
     if (added.isEmpty) main
-    else commit("cherry-pick", requireParentVersion = Some(main.version),
-      extraReuseRefs = bt.readSegmentRefs(bHead.version))(p =>
+    else log.commit("cherry-pick", requireParentVersion = Some(main.version),
+      extraReuseRefs = bHead.segments)(p =>
       (main.schema, main.partitionCols, p.get.entries ++ added, main.properties,
         Map("branch" -> b, "branch-version" -> bHead.version.toString,
           "imported-entries" -> added.size.toString)))
@@ -2783,39 +2263,25 @@ class LakeTable(
 
   /** Delete branch `b`'s metadata. Unpublished data dirs it alone
     * referenced become orphans, collected by [[removeOrphanFiles]]. */
-  def dropBranch(b: String): Unit = synchronized {
-    fs.delete(new Path(metaDir, s"branch-$b"), true); ()
-  }
+  def dropBranch(b: String): Unit = synchronized { log.dropBranch(b) }
 
-  /** Root-table handle of this ref tree (this, unless this handle was
-    * created via [[branch]]). Branch names cannot contain '/', so the
-    * first "/branch-" segment always marks where the branch chain
-    * starts under the root's meta subpath. */
-  private def rootTable: LakeTable = {
-    val i = metaSubpath.indexOf("/branch-")
-    if (i < 0) this
-    else new LakeTable(spark, location, name.takeWhile(_ != '@'),
-      metaSubpath.substring(0, i))
-  }
-
-  /** Every lineage in the ref tree: the root table plus all branches,
-    * recursively (branches of branches included). All of them share the
-    * same immutable `<location>/data` dirs. */
-  private def lineages: Seq[LakeTable] = {
-    def walk(t: LakeTable): Seq[LakeTable] =
-      t +: t.listBranches.map(t.branch).flatMap(walk)
-    walk(rootTable)
-  }
-
-  /** Data dirs referenced by any snapshot of any OTHER lineage in the
-    * ref tree — pinned against expiry/orphan-collection by this handle.
-    * Computed from the ROOT, not this handle: a branch handle deleting
-    * from the shared data root must never collect dirs that main (or a
+  /** Data dirs that `own` (the snapshots this handle keeps) or any
+    * snapshot of any OTHER lineage in the ref tree references — pinned
+    * against expiry/orphan-collection by this handle. Other lineages are
+    * found from the ROOT, not this handle: a branch handle deleting from
+    * the shared data root must never collect dirs that main (or a
     * sibling branch) still references. */
-  private def otherLineageDirs: Set[String] =
-    lineages.filter(_.metaSubpath != metaSubpath)
-      .flatMap(_.allSnapshots.flatMap(s =>
-        (s.entries ++ s.deleteEntries).map(_.dir))).toSet
+  private def referencedDirs(own: Seq[Snapshot]): Set[String] =
+    (own ++ log.lineages.filter(_.dir != log.dir).flatMap(_.all))
+      .flatMap(s => (s.entries ++ s.deleteEntries).map(_.dir)).toSet
+
+  /** Delete the data dirs `drop` selects, with their bloom sidecars. */
+  private def dropDataDirs(drop: FileStatus => Boolean): Int = {
+    val dataRoot = new Path(s"$location/data")
+    val victims = if (fs.exists(dataRoot)) fs.listStatus(dataRoot).toSeq.filter(drop) else Nil
+    victims.foreach { st => fs.delete(st.getPath, true); deleteBloomDir(st.getPath.getName) }
+    victims.size
+  }
 
   // -------------------------------------------------------------------
   // maintenance (CALL-procedure analogs, maintenance.py semantics)
@@ -2826,27 +2292,21 @@ class LakeTable(
     * snapshots younger than `olderThanMs`; then drop data dirs no
     * retained snapshot (and no branch) references. Returns #expired. */
   def expireSnapshots(keepLast: Int = 1, olderThanMs: Long = Long.MaxValue): Int = synchronized {
-    val all = allSnapshots
+    val all = log.all
     val tagged = tags.values.toSet
     val keepVersions = all.takeRight(keepLast).map(_.version).toSet ++ tagged ++
       all.filter(_.timestampMs >= olderThanMs).map(_.version)
     val (keep, expire) = all.partition(s => keepVersions(s.version))
     if (expire.isEmpty) 0
     else {
-      val referenced =
-        keep.flatMap(s => (s.entries ++ s.deleteEntries).map(_.dir)).toSet ++
-          otherLineageDirs
-      expire.foreach(s => fs.delete(new Path(metaDir, f"v${s.version}%05d.json"), false))
-      val dataRoot = new Path(s"$location/data")
-      if (fs.exists(dataRoot))
-        fs.listStatus(dataRoot).toSeq
-          .filter(st => !referenced(st.getPath.getName))
-          .foreach { st => fs.delete(st.getPath, true); deleteBloomDir(st.getPath.getName) }
+      val referenced = referencedDirs(keep)
+      expire.foreach(s => log.delete(s.version))
+      dropDataDirs(st => !referenced(st.getPath.getName))
       // segment files only the expired snapshots referenced are now
       // unreachable — sweep them behind the commit-window grace
       val grace = keep.lastOption.flatMap(_.properties.get("manifest.gc-grace-ms"))
         .map(_.toLong).getOrElse(SegmentGcGraceMs)
-      sweepSegments(System.currentTimeMillis() - grace)
+      log.sweepSegments(System.currentTimeMillis() - grace)
       expire.size
     }
   }
@@ -2864,7 +2324,7 @@ class LakeTable(
     // not re-shuffle the repartition(n) layout it just chose
     val (_, entries) = writeData(compacted, s.partitionCols,
       s.properties - "write.sort-order")
-    commit("rewrite-data-files", requireParentVersion = Some(s.version),
+    log.commit("rewrite-data-files", requireParentVersion = Some(s.version),
       deleteEntriesFn = _ => Nil)(_ =>
       (s.schema, s.partitionCols, entries, s.properties,
         Map("rewritten-files" -> before.toString)))
@@ -3000,7 +2460,7 @@ class LakeTable(
           })),
           Duration.Inf).flatten
       }
-      commit(operation, requireParentVersion = Some(s.version),
+      log.commit(operation, requireParentVersion = Some(s.version),
         deleteEntriesFn = _ => Nil)(_ =>
         (s.schema, s.partitionCols, entries, s.properties,
           Map("rewritten-files" -> before.toString) ++ summaryExtra))
@@ -3013,27 +2473,14 @@ class LakeTable(
     * older than the same cutoff are swept too (lost commits leave
     * them); the returned count is data dirs only. */
   def removeOrphanFiles(olderThanMs: Long): Int = synchronized {
-    val referenced =
-      allSnapshots.flatMap(s =>
-        (s.entries ++ s.deleteEntries).map(_.dir)).toSet ++ otherLineageDirs
-    sweepSegments(olderThanMs)
-    val dataRoot = new Path(s"$location/data")
-    if (!fs.exists(dataRoot)) 0
-    else {
-      val orphans = fs.listStatus(dataRoot).toSeq.filter { st =>
-        !referenced(st.getPath.getName) && st.getModificationTime < olderThanMs
-      }
-      orphans.foreach { st => fs.delete(st.getPath, true); deleteBloomDir(st.getPath.getName) }
-      orphans.size
-    }
+    val referenced = referencedDirs(log.all)
+    log.sweepSegments(olderThanMs)
+    dropDataDirs(st => !referenced(st.getPath.getName) && st.getModificationTime < olderThanMs)
   }
 
   // -------------------------------------------------------------------
   // table statistics (ANALYZE TABLE / Iceberg Puffin analog)
   // -------------------------------------------------------------------
-
-  private def statsDir = new Path(s"$location/stats")
-  private def statsPath(v: Long) = new Path(statsDir, f"v$v%05d.stats.json")
 
   /** Types the DataSketches HLL aggregate accepts. */
   private def hllSupported(t: DataType): Boolean = t match {
@@ -3060,7 +2507,7 @@ class LakeTable(
       hll_sketch_agg(col(c)).as(s"__sk_$c"),
       hll_sketch_estimate(hll_sketch_agg(col(c))).as(s"__ndv_$c")))
     val row = read.agg(aggs.head, aggs.tail: _*).head()
-    writeStatsFile(TableStats(
+    log.writeStats(TableStats(
       s.version,
       row.getAs[Long]("__n"),
       supported.map(c => c -> row.getAs[Long](s"__ndv_$c")).toMap,
@@ -3068,13 +2515,7 @@ class LakeTable(
   }
 
   /** Latest stored stats at or below the current version, if any. */
-  def stats: Option[TableStats] = {
-    val cur = currentVersion.getOrElse(return None)
-    if (!fs.exists(statsDir)) return None
-    fs.listStatus(statsDir).toSeq.map(_.getPath.getName)
-      .collect { case StatsFileRe(v) => v.toLong }
-      .filter(_ <= cur).sorted.lastOption.map(readStatsFile)
-  }
+  def stats: Option[TableStats] = log.headVersion.flatMap(log.stats)
 
   /** Estimated distinct count of `colName` from the stored stats. */
   def ndv(colName: String): Option[Long] = stats.flatMap(_.ndv.get(colName))
@@ -3092,7 +2533,7 @@ class LakeTable(
     val cur = requireExists()
     if (cur.version == st.version) return st
     val opsSince =
-      versionsOnDisk.filter(_ > st.version).map(v => readSnapshot(v).operation)
+      log.versions.filter(_ > st.version).map(v => log.read(v).operation)
     val cols = st.sketches.keys.toSeq.sorted
     if (!opsSince.forall(Set("append", "append-evolve"))) return analyze(cols)
     val inc = changes(st.version)
@@ -3100,66 +2541,31 @@ class LakeTable(
       cols.map(c => hll_sketch_agg(col(c)).as(s"__sk_$c"))
     val row = inc.agg(aggs.head, aggs.tail: _*).head()
     if (row.getAs[Long]("__n") == 0L)
-      return writeStatsFile(st.copy(version = cur.version))
+      return log.writeStats(st.copy(version = cur.version))
     // union stored + increment sketches: one local 1-row evaluation
     val merged = spark.range(1).select(cols.flatMap { c =>
       val u = hll_union(lit(st.sketches(c)), lit(row.getAs[Array[Byte]](s"__sk_$c")))
       Seq(u.as(s"__sk_$c"), hll_sketch_estimate(u).as(s"__ndv_$c"))
     }: _*).head()
-    writeStatsFile(TableStats(
+    log.writeStats(TableStats(
       cur.version,
       st.rowCount + row.getAs[Long]("__n"),
       cols.map(c => c -> merged.getAs[Long](s"__ndv_$c")).toMap,
       cols.map(c => c -> merged.getAs[Array[Byte]](s"__sk_$c")).toMap))
   }
 
-  private def writeStatsFile(st: TableStats): TableStats = {
-    val root = Mapper.createObjectNode()
-    root.put("version", st.version)
-    root.put("rowCount", st.rowCount)
-    val cn = root.putObject("columns")
-    st.sketches.keys.toSeq.sorted.foreach { c =>
-      val o = cn.putObject(c)
-      o.put("ndv", st.ndv(c))
-      o.put("sketch", java.util.Base64.getEncoder.encodeToString(st.sketches(c)))
+  /** Parquet files under `p`, recursively; none once `p` is gone. */
+  private def parquetFiles(p: Path): Seq[FileStatus] =
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      val buf = scala.collection.mutable.ArrayBuffer[FileStatus]()
+      while (it.hasNext) { val f = it.next(); if (f.getPath.getName.endsWith(".parquet")) buf += f }
+      buf.toSeq
     }
-    val out = fs.create(statsPath(st.version), true)
-    try out.write(Mapper.writerWithDefaultPrettyPrinter.writeValueAsBytes(root))
-    finally out.close()
-    fs.listStatus(statsDir).foreach { f =>
-      f.getPath.getName match {
-        case StatsFileRe(v) if v.toLong != st.version => fs.delete(f.getPath, false)
-        case _ => ()
-      }
-    }
-    st
-  }
 
-  private def readStatsFile(v: Long): TableStats = {
-    val in = fs.open(statsPath(v))
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val n = Mapper.readTree(new String(bytes, StandardCharsets.UTF_8))
-    val cols = n.get("columns")
-    val names = cols.fieldNames().asScala.toSeq
-    TableStats(
-      n.get("version").asLong,
-      n.get("rowCount").asLong,
-      names.map(c => c -> cols.get(c).get("ndv").asLong).toMap,
-      names.map(c =>
-        c -> java.util.Base64.getDecoder.decode(cols.get(c).get("sketch").asText)).toMap)
-  }
-
-  private def dataFiles(s: Snapshot): Seq[org.apache.hadoop.fs.FileStatus] =
-    s.entries.map(_.dir).distinct.flatMap { dir =>
-      val p = new Path(s"$location/data/$dir")
-      if (!fs.exists(p)) Nil
-      else {
-        val it = fs.listFiles(p, true)
-        val buf = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-        while (it.hasNext) { val f = it.next(); if (f.getPath.getName.endsWith(".parquet")) buf += f }
-        buf.toSeq
-      }
-    }
+  private def dataFiles(s: Snapshot): Seq[FileStatus] =
+    s.entries.map(_.dir).distinct.flatMap(dir => parquetFiles(new Path(s"$location/data/$dir")))
 
   private def dataFileCount(s: Snapshot): Int = dataFiles(s).size
   private def dataByteSize(s: Snapshot): Long = dataFiles(s).map(_.getLen).sum
@@ -3169,16 +2575,6 @@ class CommitConflictException(msg: String, cause: Throwable)
   extends RuntimeException(msg, cause)
 
 object LakeTable {
-  private val VersionFileRe = "v(\\d+)\\.json".r
-
-  private val StatsFileRe = "v(\\d+)\\.stats\\.json".r
-  private val TagsFileRe = "tags-v(\\d+)\\.json".r
-
-  /** Sentinel sequence number on freshly-written manifest entries;
-    * [[LakeTable.commit]] replaces it with the commit's stamp from the
-    * monotonic `lastSequenceNumber` counter. */
-  private val StampAtCommit = -1L
-
   /** Default for `write.stats.distributed-min-files` (see
     * [[LakeTable.statsDistMinFiles]]): below it the driver's footer
     * opens beat a Spark job's launch floor; at/above it the job wins
@@ -3273,36 +2669,15 @@ object LakeTable {
   private val reachVerdictCache =
     new graft.core.BoundedCache[(String, String, String), Boolean](1 << 16, _ => 1L)
 
-  /** Superseded `tags-v<n>.json` generations kept on each successful
-    * claim. Sized so a reader's bounded re-list retries cannot be
-    * outrun by back-to-back tag writers sweeping files under it. */
-  private val TagGenerationsRetained = 4L
-
   /** Table property naming the equality-delete key columns of a
     * merge-on-read table (comma-joined, fixed at the first MoR write). */
   val MorKeysProp = "mor.delete-keys"
-
-  /** Target entries per manifest segment file (override per table with
-    * `manifest.target-segment-entries`). ~250 B of JSON per entry →
-    * ~1 MB segments at the default. */
-  private val SegmentTargetEntries = 4096
-
-  /** Segment-count cap per snapshot before small segments fold together
-    * (override with `manifest.max-segments`). Bounds both the snapshot
-    * JSON and the per-commit reuse check. */
-  private val MaxSegments = 64
 
   /** Age below which an unreferenced segment file is NOT swept —
     * covers the window between a writer materializing its segments and
     * claiming the snapshot that references them (override with
     * `manifest.gc-grace-ms`). */
   private val SegmentGcGraceMs = 10 * 60 * 1000L
-
-  // Immutable-segment content cache (the manifest cache every Iceberg
-  // runtime keeps): keyed by absolute file path — safe because segment
-  // files are write-once — bounded by total cached entries, LRU.
-  private val segmentCache =
-    new graft.core.BoundedCache[String, Seq[ManifestEntry]](500000, _.size.toLong)
 
   /** Bounded pool for concurrent per-slice rewrite jobs (daemon threads
     * so an abandoned session still exits). */
@@ -3316,7 +2691,6 @@ object LakeTable {
 
   /** Hidden partition column carrying the hash-bucket id. */
   val BucketCol = "__bucket"
-  private val Mapper = new ObjectMapper()
 
   /** Parity with the reference's RTAS tableProperties
     * (`iceberg.py:68-96`) — inert metadata here, but carried so a
@@ -3324,10 +2698,6 @@ object LakeTable {
   val DefaultProperties: Map[String, String] = Map(
     "format-version" -> "2",
     "write.spark.accept-any-schema" -> "false")
-
-  private def objToMap(n: ObjectNode): Map[String, String] =
-    if (n == null) Map.empty
-    else n.properties().iterator().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
 }
 
 /** Warehouse-level catalog: `schema.table` → LakeTable directories
@@ -3365,7 +2735,7 @@ class LakeCatalog(val spark: SparkSession, val warehouse: String) {
 
   /** ALTER TABLE ... RENAME TO (`scripts/migrate_v2_naming.sql:32-47`,
     * the ops_bronze → di_ops schema migration — cross-database renames
-    * included): a metadata move of the table directory (data + `_meta` +
+    * included): a metadata move of the table directory (data + metadata log +
     * every branch/tag ref) under the target schema. No data is copied —
     * the closest a path-addressed store comes to Glue's
     * rename-keeps-the-S3-files behavior. The target must not exist;

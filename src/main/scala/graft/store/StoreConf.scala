@@ -22,10 +22,16 @@ import org.apache.spark.sql.SparkSession
   * GraftSession: CPU-heavy tiny-BYTE compute stages (char-ngram dedup,
   * media kernels) would be serialized by a global bytes-first policy
   * (measured and rejected in r21) — the store's commit/probe stages
-  * are IO/floor-bound and have no such shape. Nesting is safe (inner
-  * scopes restore the outer scope's value); store ops are
-  * driver-sequential so the brief session-wide visibility of the
-  * override cannot re-plan a concurrent compute query in practice.
+  * are IO/floor-bound and have no such shape. A CDC micro-batch
+  * (`CdcPipeline.processBatch`) runs in one scope: its decode and dedup
+  * frames are batch-sized store inputs.
+  *
+  * Scopes on one session nest, and overlap across threads (concurrent
+  * CDC topics): the first scope in saves and sets the overrides, the
+  * last one out restores them, so interleaved exits cannot leave them
+  * on. While any scope is open they are visible session-wide, so a
+  * compute query running meanwhile on the same session plans
+  * bytes-first too.
   */
 private[graft] object StoreConf {
   // canChangeCachedPlanOutputPartitioning: the store persists its
@@ -38,13 +44,25 @@ private[graft] object StoreConf {
     "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true")
 
+  // per session: open scopes, and the values the first one replaced
+  private val open =
+    scala.collection.mutable.Map.empty[SparkSession, (Int, Seq[(String, Option[String])])]
+
   def bytesFirstCoalesce[A](spark: SparkSession)(body: => A): A = {
-    val prev = Overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    Overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    open.synchronized {
+      val (depth, prev) = open.getOrElse(spark,
+        (0, Overrides.map { case (k, _) => k -> spark.conf.getOption(k) }))
+      if (depth == 0) Overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+      open(spark) = (depth + 1, prev)
+    }
     try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+    finally open.synchronized {
+      val (depth, prev) = open(spark)
+      if (depth > 1) open(spark) = (depth - 1, prev)
+      else {
+        open -= spark
+        prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
     }
   }
 }

@@ -73,6 +73,9 @@ object DeleteKeyMask {
     case _ => false
   }
 
+  private val readers = new graft.core.BoundedCache[
+    (String, StructType), PartitionedFile => Iterator[InternalRow]](16, _ => 1L)
+
   private def normalize(v: Any): Any = v match {
     case d: Double => if (d.isNaN) Double.NaN else if (d == 0.0d) 0.0d else d
     case f: Float => if (f.isNaN) Float.NaN else if (f == 0.0f) 0.0f else f
@@ -99,9 +102,9 @@ object DeleteKeyMask {
 
   /** Reads the key tuples of delete files (id → parquet parts) on the
     * driver, with no Spark job: Spark's own parquet reader, built once
-    * and called directly, under `schema` (the table's current key
-    * types, so a promoted column widens exactly as it does in the data
-    * scan), each file's set broadcast once. None for a file past
+    * per session and schema and called directly, under `schema` (the
+    * table's current key types, so a promoted column widens exactly as
+    * it does in the data scan), each file's set broadcast once. None for a file past
     * `cap` distinct tuples; a read failure
     * throws, and so does a session whose parquet reader would not be
     * the vectorized one: only that reader's iterator can be closed
@@ -115,9 +118,13 @@ object DeleteKeyMask {
       if (!ParquetUtils.isBatchReadSupportedForSchema(s.sessionState.conf, schema))
         throw new UnsupportedOperationException(
           s"delete keys ${schema.catalogString} need the vectorized parquet reader")
-      val read = new ParquetFileFormat().buildReaderWithPartitionValues(
-        s, schema, new StructType(), schema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), s.sessionState.newHadoopConf())
+      // a build broadcasts the session's whole Hadoop conf (tens of ms,
+      // several reads' worth): build once per session and key schema
+      val read = readers.getOrElseUpdate((s.sessionUUID, schema)) {
+        new ParquetFileFormat().buildReaderWithPartitionValues(
+          s, schema, new StructType(), schema, Nil,
+          Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), s.sessionState.newHadoopConf())
+      }
       val types = schema.map(_.dataType)
       files.map { case (id, parts) =>
         val tuples = new java.util.HashSet[Any]()
