@@ -75,15 +75,16 @@ object CdcPipeline {
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Avro decode → Debezium cast → id_iceberg → conform-to-catalog →
-    * latest-offset dedup → (upserts, deletes). None when the target
-    * table does not exist (skip-with-warning, `cdc_pipeline.py:184-188`). */
-  def transformAndDedup(
+    * latest-offset dedup: one row per key, its `__op` kept. None when
+    * the target table does not exist (skip-with-warning,
+    * `cdc_pipeline.py:184-188`). */
+  def latestChanges(
       schemaFiltered: DataFrame,
       keySchemaStr: String,
       valueSchemaStr: String,
       debeziumSchema: Map[String, String],
       pkCols: Seq[String],
-      table: LakeTable): Option[(DataFrame, DataFrame)] = {
+      table: LakeTable): Option[DataFrame] = {
 
     if (!table.exists) {
       logger.warn(s"Table ${table.name} not found. Skipping.")
@@ -112,53 +113,38 @@ object CdcPipeline {
     val cdcDf = DebeziumCast.conformToCatalog(
       transformed, catalogSchema, debeziumSchema, extraCols = Seq("__op", "__offset"))
 
-    val dedup = Transforms.latestPerKey(cdcDf, Seq("id_iceberg"), "__offset")
-      .drop("__offset")
-
-    Some((
-      dedup.filter(col("__op") =!= "d").drop("__op"),
-      dedup.filter(col("__op") === "d").drop("__op")))
+    Some(Transforms.latestPerKey(cdcDf, Seq("id_iceberg"), "__offset").drop("__offset"))
   }
 
-  /** MERGE the upserts, DELETE the deletes (`cdc_pipeline.py:211-251`).
-    * The reference stages both through global temp views; those are
-    * shared by every topic thread, so two same-named tables in different
-    * schemas would race on one view name — the frames go straight to
-    * the table instead.
+  /** [[latestChanges]] split into (upserts, deletes). */
+  def transformAndDedup(
+      schemaFiltered: DataFrame,
+      keySchemaStr: String,
+      valueSchemaStr: String,
+      debeziumSchema: Map[String, String],
+      pkCols: Seq[String],
+      table: LakeTable): Option[(DataFrame, DataFrame)] =
+    latestChanges(schemaFiltered, keySchemaStr, valueSchemaStr, debeziumSchema, pkCols, table)
+      .map(c => (upserts(c), deletes(c)))
+
+  private val isDelete = col("__op") === "d"
+  private def upserts(changes: DataFrame): DataFrame = changes.filter(!isDelete).drop("__op")
+  private def deletes(changes: DataFrame): DataFrame = changes.filter(isDelete).drop("__op")
+
+  /** One micro-batch (`cdc_pipeline.py:254-339`): one aggregate per
+    * (value, key) schema-id pair gives both the slices and the ledger
+    * row's statistics; value-schema versions are applied in ASCENDING
+    * id order (so the newest version's MERGE lands last and wins);
+    * then track, and append the batch-stats watermark row.
     *
-    * Each side is persisted around its apply: the decode → cast →
-    * window-dedup lineage above it is otherwise re-evaluated up to three
-    * times per apply (the isEmpty probe, the COW pruning agg/collect,
-    * and the rewrite join) — caching the micro-batch-sized result makes
-    * those passes one Avro decode instead of three. */
-  def applyCdcChanges(
-      table: LakeTable,
-      upserts: DataFrame,
-      deletes: DataFrame): Unit = {
-
-    val up = upserts.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (!up.isEmpty) {
-        logger.info(s"Executing Merge Into for ${table.name}")
-        // honors write.merge.mode: COW (default) or merge-on-read — the
-        // reference's commented per-table switch (iceberg.py:78-84)
-        table.upsert(up, Seq("id_iceberg"))
-      }
-    } finally up.unpersist(false)
-
-    val del = deletes.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (!del.isEmpty) {
-        logger.info(s"Executing Delete for ${table.name}")
-        table.deleteMatching(del.select("id_iceberg"), Seq("id_iceberg"))
-      }
-    } finally del.unpersist(false)
-  }
-
-  /** One micro-batch (`cdc_pipeline.py:254-339`): persist, resolve the
-    * distinct schema ids, process value-schema versions in ASCENDING id
-    * order (so the newest version's MERGE lands last and wins), apply,
-    * track, and append the batch-stats watermark row. */
+    * Each slice's latest-per-key frame is persisted once, with its
+    * `__op`: the decode → cast → window-dedup lineage then runs once
+    * per slice, in the aggregate that counts both sides, and the MERGE
+    * (`cdc_pipeline.py:211-237`) and the DELETE (`:239-251`) read
+    * filters of that cache. The reference stages both through global
+    * temp views; those are shared by every topic thread, so two
+    * same-named tables in different schemas would race on one view
+    * name — the frames go straight to the table instead. */
   def processBatch(batchDf: DataFrame, batchId: Long, ctx: PipelineContext): Unit = {
     val startNs = System.nanoTime()
     val table = ctx.catalog.table(ctx.fullTableName)
@@ -180,10 +166,14 @@ object CdcPipeline {
     batchDf.persist(StorageLevel.MEMORY_AND_DISK)
     // the batch's frames are batch-sized store inputs: coalesce them
     // bytes-first, as the store's own actions are (see StoreConf)
-    val stats = StoreConf.bytesFirstCoalesce(batchDf.sparkSession) {
+    val pairs = StoreConf.bytesFirstCoalesce(batchDf.sparkSession) {
       try {
-        val idPairs = batchDf.select("value_schema_id", "key_schema_id").distinct()
-          .collect().map(r => (r.getInt(0), r.getInt(1)))
+        val rows = batchDf.groupBy("value_schema_id", "key_schema_id").agg(
+          count(lit(1)),
+          date_format(max("timestamp"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
+          min("offset"),
+          max("offset")).collect()
+        val idPairs = rows.map(r => (r.getInt(0), r.getInt(1)))
         val schemaOf = idPairs.flatMap(p => Seq(p._1, p._2)).distinct
           .map(id => id -> ctx.schemaRegistry.getSchema(id)).toMap
         // value id → its smallest paired key id, in ascending value-id
@@ -198,30 +188,43 @@ object CdcPipeline {
           val schemaFiltered = batchDf.filter(col("value_schema_id") === valueSchemaId)
           val valueSchemaStr = schemaOf(valueSchemaId)
           val keySchemaStr = schemaOf(keySchemaId)
-          transformAndDedup(schemaFiltered, keySchemaStr, valueSchemaStr,
+          latestChanges(schemaFiltered, keySchemaStr, valueSchemaStr,
             DebeziumSchema.extract(valueSchemaStr),
             DebeziumSchema.keyColumns(keySchemaStr), table)
-            .foreach { case (upserts, deletes) =>
-              applyCdcChanges(table, upserts, deletes)
+            .foreach { changes =>
+              val cached = changes.persist(StorageLevel.MEMORY_AND_DISK)
+              try {
+                val sides = cached.agg(
+                  count(when(!isDelete, true)), count(when(isDelete, true))).head()
+                if (sides.getLong(0) > 0) {
+                  logger.info(s"Executing Merge Into for ${table.name}")
+                  // honors write.merge.mode: COW (default) or merge-on-read — the
+                  // reference's commented per-table switch (iceberg.py:78-84)
+                  table.upsert(upserts(cached), Seq("id_iceberg"))
+                }
+                if (sides.getLong(1) > 0) {
+                  logger.info(s"Executing Delete for ${table.name}")
+                  table.deleteMatching(deletes(cached).select("id_iceberg"), Seq("id_iceberg"))
+                }
+              } finally cached.unpersist(false)
             }
         }
 
         ctx.tracker.foreach(_.mark(ctx.fullTableName))
-
-        batchDf.agg(
-          count(lit(1)).as("cnt"),
-          date_format(max("timestamp"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("max_ts"),
-          min("offset").as("min_offset"),
-          max("offset").as("max_offset")).head()
+        rows
       } finally batchDf.unpersist()
     }
 
+    // the batch's statistics, folded from its per-pair rows: the
+    // timestamp strings are fixed-width, so their string max is the
+    // latest; an empty batch has no rows, so count 0 and no bounds
+    def present(i: Int) = pairs.toSeq.flatMap(r => Option(r.get(i)))
     Watermark.appendCdcWatermark(
       ctx.catalog, ctx.dagId, ctx.icebergSchema, ctx.icebergTable,
-      eventCount = stats.getLong(0),
-      maxEventTs = Option(stats.getString(1)).map(Timestamp.valueOf),
-      minOffset = Option(stats.get(2)).map(_.asInstanceOf[Long]),
-      maxOffset = Option(stats.get(3)).map(_.asInstanceOf[Long]),
+      eventCount = pairs.map(_.getLong(2)).sum,
+      maxEventTs = present(3).map(_.asInstanceOf[String]).maxOption.map(Timestamp.valueOf),
+      minOffset = present(4).map(_.asInstanceOf[Long]).minOption,
+      maxOffset = present(5).map(_.asInstanceOf[Long]).maxOption,
       batchId = Some(batchId),
       processingDurationSec = Some((System.nanoTime() - startNs) / 1e9),
       scheduledAt = ctx.scheduledAt)

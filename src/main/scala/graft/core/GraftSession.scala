@@ -65,6 +65,9 @@ object GraftSession {
       // into a temp dir and rename (BatchIngest.jdbcToParquet does).
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
       .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      // the local file system's permission setting without a chmod
+      // fork per created file and directory (see NioLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
     if (excludeSimplifyCasts)
       b.config(
         "spark.sql.optimizer.excludedRules",

@@ -19,20 +19,20 @@ import graft.store.{LakeCatalog, LakeTable}
   *  - `maintenance_watermark`  one row per procedure run with
   *    success/failed/skipped status
   *
-  * Appends are serialized with a per-table JVM lock exactly like the
-  * reference (`watermark.py:16,193`) — combined with LakeTable's
-  * additive-commit retry this makes concurrent thread-per-topic writes
-  * safe. At scale the ledgers stay tiny (rows ∝ batches, not data), so
-  * the single-row append commits are metadata-only costs.
+  * Appends are additive table commits. The reference serializes each
+  * whole append under a per-table lock (`watermark.py:16,193`); here
+  * the row writes run concurrently and only the commit is serialized:
+  * [[LakeTable.append]] holds the table's in-JVM commit lock around the
+  * log commit, and a writer in another process that wins the claim
+  * first makes the append rebuild on the fresh head and retry. At scale
+  * the ledgers stay tiny (rows ∝ batches, not data), so the single-row
+  * append commits are metadata-only costs.
   */
 object Watermark {
 
   val OpsSchema = "di_ops"
   val CdcTable = s"$OpsSchema.cdc_watermark"
   val MaintenanceTable = s"$OpsSchema.maintenance_watermark"
-
-  private val cdcLock = new Object
-  private val maintenanceLock = new Object
 
   /** `watermark.py:40-62`. */
   val CdcSchema: StructType = StructType(Seq(
@@ -127,7 +127,7 @@ object Watermark {
       maxOffset: Option[Long] = None,
       batchId: Option[Long] = None,
       processingDurationSec: Option[Double] = None,
-      scheduledAt: Option[Timestamp] = None): Unit = cdcLock.synchronized {
+      scheduledAt: Option[Timestamp] = None): Unit = {
     // batch-id rows carry the stream's replay high-water mark ON the
     // same append commit (see [[lastCdcBatch]]) — heartbeats
     // (batchId = None) never move it
@@ -207,7 +207,7 @@ object Watermark {
       errorMessage: Option[String] = None,
       rewrittenFilesCount: Option[Long] = None,
       addedFilesCount: Option[Long] = None,
-      batchId: Option[Long] = None): Unit = maintenanceLock.synchronized {
+      batchId: Option[Long] = None): Unit = {
     val row = Row(
       dagId, icebergSchema, tableName, procedureType,
       startedAt, completedAt.orNull, Double.box(durationSec), status,

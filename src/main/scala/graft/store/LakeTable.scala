@@ -139,6 +139,15 @@ class LakeTable(
 
   private[graft] val log: TableLog = branchLog.getOrElse(TableLog.at(fs, location, name))
 
+  /** Runs an additive commit under its lineage's in-JVM commit lock:
+    * handles in one JVM then claim one at a time, so none of them loses
+    * a claim to another and sleeps its retry wait, while the data
+    * writes before the commit still run in parallel. Writers in other
+    * processes still race on the claim ([[TableLog.commit]]). */
+  private def serialized(commit: => Snapshot): Snapshot =
+    commitLocks.computeIfAbsent(fs.makeQualified(log.dir).toString, _ => new Object)
+      .synchronized(commit)
+
   // -------------------------------------------------------------------
   // metadata
   // -------------------------------------------------------------------
@@ -970,10 +979,10 @@ class LakeTable(
     val s = requireExists()
     val (_, entries) = writeData(prepared(df, s), s.partitionCols, s.properties)
     val (retries, waitMs) = retryConfig(s)
-    log.commit("append", retries, waitMs)(p =>
+    serialized(log.commit("append", retries, waitMs)(p =>
       (p.get.schema, p.get.partitionCols, p.get.entries ++ entries,
         p.get.properties ++ extraProperties,
-        Map("added-entries" -> entries.size.toString)))
+        Map("added-entries" -> entries.size.toString))))
   }
 
   /** Union-by-name of the stored schema with a batch's schema: existing
@@ -1004,12 +1013,12 @@ class LakeTable(
     val withBucket = bucketSpec(s).map(withDerivedBucket(conformed, _)).getOrElse(conformed)
     val (_, entries) = writeData(withBucket, s.partitionCols, s.properties)
     val (retries, waitMs) = retryConfig(s)
-    log.commit("append-evolve", retries, waitMs)(p =>
+    serialized(log.commit("append-evolve", retries, waitMs)(p =>
       // re-merge against the FRESH parent so a racer's evolution survives
       (mergedSchema(p.get.schema, df.schema), p.get.partitionCols,
         p.get.entries ++ entries, p.get.properties,
         Map("added-entries" -> entries.size.toString,
-          "added-columns" -> (merged.fieldNames.length - s.schema.fieldNames.length).toString)))
+          "added-columns" -> (merged.fieldNames.length - s.schema.fieldNames.length).toString))))
   }
 
   /** Full overwrite keeping schema/partitioning/properties
@@ -1468,13 +1477,13 @@ class LakeTable(
     // against the FRESH parent: a racing first MoR write may have fixed
     // different keys, and our delete file would not carry them
     val (retries, waitMs) = retryConfig(s)
-    log.commit("merge-mor", retries, waitMs,
+    serialized(log.commit("merge-mor", retries, waitMs,
       deleteEntriesFn = p => p.map(_.deleteEntries).getOrElse(Nil) :+ delEntry)(p => {
       requireMorKeys(p.get, keys)
       (p.get.schema, p.get.partitionCols, p.get.entries ++ dataEntries,
         p.get.properties + (MorKeysProp -> keys.mkString(",")),
         Map("added-entries" -> dataEntries.size.toString, "delete-files" -> "1"))
-    })
+    }))
   }
 
   /** DELETE ... merge-on-read: just the equality-delete file — a pure
@@ -1486,13 +1495,13 @@ class LakeTable(
     // additive like mergeIntoMoR: only a delete file lands, so lost
     // races rebuild on the fresh parent (keys re-validated) and retry
     val (retries, waitMs) = retryConfig(s)
-    log.commit("delete-mor", retries, waitMs,
+    serialized(log.commit("delete-mor", retries, waitMs,
       deleteEntriesFn = p => p.map(_.deleteEntries).getOrElse(Nil) :+ delEntry)(p => {
       requireMorKeys(p.get, keys)
       (p.get.schema, p.get.partitionCols, p.get.entries,
         p.get.properties + (MorKeysProp -> keys.mkString(",")),
         Map("delete-files" -> "1"))
-    })
+    }))
   }
 
   /** Partition `entries` into (reachable, unreachable) w.r.t. the
@@ -2575,6 +2584,10 @@ class CommitConflictException(msg: String, cause: Throwable)
   extends RuntimeException(msg, cause)
 
 object LakeTable {
+  // one commit lock per table lineage in this JVM, keyed by its
+  // qualified meta dir (see [[LakeTable.serialized]])
+  private val commitLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
   /** Default for `write.stats.distributed-min-files` (see
     * [[LakeTable.statsDistMinFiles]]): below it the driver's footer
     * opens beat a Spark job's launch floor; at/above it the job wins

@@ -2,11 +2,14 @@ package graft.cdc
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
 import org.apache.avro.generic.GenericData
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -190,6 +193,60 @@ class CdcPipelineSpec extends SparkSpec {
       (1, 2, keyBytes(1), valueBytes("u", 1, "older-schema", 12.0, 1600000000000L, 1700000006000L), 30L)))
     CdcPipeline.processBatch(batch, 3L, ctx)
     state(cat).head shouldBe ((1, "newer-schema", 11.0))
+    // the ledger row covers the whole batch, folded across both slices:
+    // the min offset is slice 2's, the max offset and latest event
+    // time slice 3's (the UTC wall clock of offset 31's timestamp)
+    val wm = cat.table(Watermark.CdcTable).read.head()
+    wm.getLong(wm.fieldIndex("event_count")) shouldBe 2L
+    wm.getLong(wm.fieldIndex("min_offset")) shouldBe 30L
+    wm.getLong(wm.fieldIndex("max_offset")) shouldBe 31L
+    wm.getTimestamp(wm.fieldIndex("max_event_ts")) shouldBe
+      Timestamp.valueOf("2023-11-14 22:13:51")
+  }
+
+  test("an empty batch still writes its ledger row: count 0, no bounds") {
+    val (cat, ctx) = bootstrap()
+    CdcPipeline.processBatch(batchDf(Nil), 5L, ctx)
+    state(cat) shouldBe Seq((1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0))
+    val wm = cat.table(Watermark.CdcTable).read.head()
+    wm.getLong(wm.fieldIndex("event_count")) shouldBe 0L
+    Seq("min_offset", "max_offset", "max_event_ts").foreach(c =>
+      assert(wm.isNullAt(wm.fieldIndex(c)), c))
+    wm.getLong(wm.fieldIndex("batch_id")) shouldBe 5L
+  }
+
+  test("a merge-on-read batch with upserts and deletes runs a pinned number of Spark jobs") {
+    val (cat, ctx) = bootstrap()
+    cat.table("svc_store.tb_item").setProperties(Map(
+      "write.merge.mode" -> "merge-on-read",
+      "write.delete.mode" -> "merge-on-read"))
+    val batch = batchDf(Seq(
+      (1, 2, keyBytes(2), valueBytes("u", 2, "b2", 21.0, 1600000000000L, 1700000001000L), 10L),
+      (1, 2, keyBytes(3), valueBytes("d", 3, null, 0.0, 0L, 1700000003000L), 11L),
+      (1, 2, keyBytes(4), valueBytes("c", 4, "d", 40.0, 1600000000000L, 1700000004000L), 13L)))
+    val group = "cdc-batch-jobs"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      ListenerBusDrain(sc)
+      sc.setJobGroup(group, "one CDC batch")
+      try CdcPipeline.processBatch(batch, 1L, ctx)
+      finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    state(cat) shouldBe Seq((1, "a", 10.0), (2, "b2", 21.0), (4, "d", 40.0))
+    // one bookkeeping aggregate, one decode and dedup of the slice (its
+    // side counts), the MERGE's data and delete-file writes, the
+    // DELETE's delete-file write and the ledger append: 10 jobs (15
+    // with a separate schema-id collect and stats aggregate, and each
+    // side decoded and probed on its own)
+    jobs.get shouldBe 10
   }
 
   test("missing target table is skipped with no failure") {

@@ -413,6 +413,36 @@ class LakeTableSpec extends SparkSpec {
     t.read.orderBy("id").collect().map(_.getLong(0)).toSeq shouldBe (0L to 4L)
   }
 
+  test("concurrent appends commit one at a time per table: none needs a retry") {
+    // no retries allowed: an append that lost a claim would throw
+    // CommitConflictException, so every append landing proves the
+    // handles' commits were serialized in this JVM
+    val cat = freshCatalog()
+    cat.table("db.cl").createOrReplace(df(Seq((0L, "base", 0.0))),
+      tableProperties = Map("commit.retry.num-retries" -> "0"))
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val threads = (1 to 4).map { i =>
+      new Thread(() => {
+        go.await()
+        (1 to 5).foreach { j =>
+          val id = i * 10L + j
+          try cat.table("db.cl").append(df(Seq((id, s"t$i", id.toDouble))))
+          catch { case e: Throwable => failures.add(e) }
+        }
+      })
+    }
+    threads.foreach(_.start()); go.countDown(); threads.foreach(_.join())
+    failures.forEach(_.printStackTrace())
+    failures.isEmpty shouldBe true
+    val t = cat.table("db.cl")
+    t.read.orderBy("id").collect().map(_.getLong(0)).toSeq shouldBe
+      (0L +: (for (i <- 1 to 4; j <- 1 to 5) yield i * 10L + j))
+    // versions are contiguous, each the child of the one before
+    t.currentSnapshot.get.version shouldBe 21L
+    (2L to 21L).map(t.snapshot(_).parentVersion) shouldBe (1L to 20L).map(Some(_))
+  }
+
   test("contended rewrites: losers surface CommitConflictException, no winner is lost") {
     // mergeInto is a rewriting commit, so a lost race must NOT retry
     // blindly (a racer may have changed rows the rewrite already read) —
