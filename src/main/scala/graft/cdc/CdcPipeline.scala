@@ -2,7 +2,7 @@ package graft.cdc
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, StoreWrite}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -137,14 +137,18 @@ object CdcPipeline {
     * id order (so the newest version's MERGE lands last and wins);
     * then track, and append the batch-stats watermark row.
     *
-    * Each slice's latest-per-key frame is persisted once, with its
-    * `__op`: the decode → cast → window-dedup lineage then runs once
-    * per slice, in the aggregate that counts both sides, and the MERGE
-    * (`cdc_pipeline.py:211-237`) and the DELETE (`:239-251`) read
-    * filters of that cache. The reference stages both through global
-    * temp views; those are shared by every topic thread, so two
-    * same-named tables in different schemas would race on one view
-    * name — the frames go straight to the table instead. */
+    * Each slice's latest-per-key frame, with its `__op`, is computed
+    * once: the decode → cast → window-dedup lineage runs in one job,
+    * and the MERGE (`cdc_pipeline.py:211-237`) and the DELETE
+    * (`:239-251`) read filters of its result. A slice of at most
+    * [[LakeTable.MaxDeleteReachKeys]] events is collected to the
+    * driver: both sides are counted there, and the store writes the
+    * MERGE's data and delete files and the DELETE's delete file there,
+    * with no job. A larger slice is persisted; one aggregate counts
+    * both sides and the writes are Spark jobs. The reference stages
+    * both through global temp views; those are shared by every topic
+    * thread, so two same-named tables in different schemas would race
+    * on one view name — the frames go straight to the table instead. */
   def processBatch(batchDf: DataFrame, batchId: Long, ctx: PipelineContext): Unit = {
     val startNs = System.nanoTime()
     val table = ctx.catalog.table(ctx.fullTableName)
@@ -184,6 +188,22 @@ object CdcPipeline {
         logger.info(s"${ctx.topic} | Key Schema Ids: ${idPairs.map(_._2).distinct.toSeq} | " +
           s"Value Schema Ids: ${slices.map(_._1)}")
 
+        // a slice's events, from the bookkeeping rows: its latest-per-key
+        // rows are at most that many
+        val eventsOf = rows.groupMapReduce(_.getInt(0))(_.getLong(2))(_ + _)
+        def mergeAndDelete(changes: DataFrame, upsertCount: Long, deleteCount: Long): Unit = {
+          if (upsertCount > 0) {
+            logger.info(s"Executing Merge Into for ${table.name}")
+            // honors write.merge.mode: COW (default) or merge-on-read — the
+            // reference's commented per-table switch (iceberg.py:78-84)
+            table.upsert(upserts(changes), Seq("id_iceberg"))
+          }
+          if (deleteCount > 0) {
+            logger.info(s"Executing Delete for ${table.name}")
+            table.deleteMatching(deletes(changes).select("id_iceberg"), Seq("id_iceberg"))
+          }
+        }
+
         for ((valueSchemaId, keySchemaId) <- slices) {
           val schemaFiltered = batchDf.filter(col("value_schema_id") === valueSchemaId)
           val valueSchemaStr = schemaOf(valueSchemaId)
@@ -192,21 +212,21 @@ object CdcPipeline {
             DebeziumSchema.extract(valueSchemaStr),
             DebeziumSchema.keyColumns(keySchemaStr), table)
             .foreach { changes =>
-              val cached = changes.persist(StorageLevel.MEMORY_AND_DISK)
-              try {
-                val sides = cached.agg(
-                  count(when(!isDelete, true)), count(when(isDelete, true))).head()
-                if (sides.getLong(0) > 0) {
-                  logger.info(s"Executing Merge Into for ${table.name}")
-                  // honors write.merge.mode: COW (default) or merge-on-read — the
-                  // reference's commented per-table switch (iceberg.py:78-84)
-                  table.upsert(upserts(cached), Seq("id_iceberg"))
-                }
-                if (sides.getLong(1) > 0) {
-                  logger.info(s"Executing Delete for ${table.name}")
-                  table.deleteMatching(deletes(cached).select("id_iceberg"), Seq("id_iceberg"))
-                }
-              } finally cached.unpersist(false)
+              if (eventsOf(valueSchemaId) <= LakeTable.MaxDeleteReachKeys) {
+                // as many rows as the driver holds for a read's delete
+                // keys: collected in one job, both sides counted here, and
+                // the store writes them on the driver
+                val local = StoreWrite.collectLocal(changes)
+                val ops = local.select("__op").collect().map(_.getString(0))
+                mergeAndDelete(local, ops.count(op => op != null && op != "d"), ops.count(_ == "d"))
+              } else {
+                val cached = changes.persist(StorageLevel.MEMORY_AND_DISK)
+                try {
+                  val sides = cached.agg(
+                    count(when(!isDelete, true)), count(when(isDelete, true))).head()
+                  mergeAndDelete(cached, sides.getLong(0), sides.getLong(1))
+                } finally cached.unpersist(false)
+              }
             }
         }
 

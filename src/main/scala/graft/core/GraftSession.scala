@@ -53,7 +53,9 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       // Per-commit committer tax (r14 `Probe <sf> commit`: lifecycle-dense store
       // queries are bounded by the ~110 ms Spark-job floor of each tiny
-      // write, not by manifest machinery). v2 commits task output
+      // write, not by manifest machinery; a write of rows the driver
+      // already holds now skips that floor, see StoreWrite, and these
+      // settings apply to the writes that still run as jobs). v2 commits task output
       // straight to the destination dir — atomic-visibility is NOT lost,
       // because every table commit writes to a fresh UUID dir that stays
       // invisible until the snapshot claim references it (a failed job

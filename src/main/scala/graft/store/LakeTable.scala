@@ -203,33 +203,38 @@ class LakeTable(
     // is distribution-mode=none for the same reason). The index tables
     // (LSH bands/toks), whose every commit is a wide shuffled frame of
     // small rows, set it at create time.
-    val distributed =
-      if (partitionCols.nonEmpty) df.hint("rebalance", partitionCols.map(col): _*)
-      else if (props.get("write.distribution-mode").contains("rebalance"))
-        df.hint("rebalance")
-      else df
-    // write.sort-order (Iceberg's table sort order, applied AT INGEST):
-    // cluster + locally sort every write so data files carry tight,
-    // near-disjoint column ranges from the first commit — parquet
-    // row-group skipping then works on the sort key without waiting
-    // for a sorted compaction pass. Unpartitioned tables also get a
-    // RANGE distribution (files in the dir become range-disjoint);
-    // partitioned writes keep the leaf-rebalance distribution and sort
-    // within tasks. `zorder(a,b,...)` sorts on the interleaved-bit
-    // curve ranked within THIS batch's bounds (one extra agg pass over
-    // the batch), so multi-dimension row-group skipping works from
-    // ingest. Missing/unsortable columns are ignored.
-    val ZOrderSpec = "(?i)\\s*zorder\\(([^)]*)\\)\\s*".r
-    val sortExprs: Seq[Column] = props.get("write.sort-order") match {
-      case Some(ZOrderSpec(inner)) =>
-        val zc = inner.split(",").toSeq.map(_.trim)
-          .filter(c => c.nonEmpty && df.schema.fieldNames.contains(c))
-        if (zc.size >= 2) zOrderExpr(df, zc).toSeq else Nil
-      case Some(cols) => cols.split(",").toSeq.map(_.trim)
-        .filter(c => c.nonEmpty && df.schema.fieldNames.contains(c)).map(col)
-      case None => Nil
-    }
-    val out =
+    // rows the driver already holds are written there, with no job:
+    // checked on the frame itself, before the distribution or sort
+    // below puts a node over its LocalRelation. A sort order keeps the
+    // Spark write (its range split and ZORDER ranking are jobs).
+    val local = if (props.contains("write.sort-order")) None else StoreWrite.local(df)
+    val out = local.toLeft {
+      val distributed =
+        if (partitionCols.nonEmpty) df.hint("rebalance", partitionCols.map(col): _*)
+        else if (props.get("write.distribution-mode").contains("rebalance"))
+          df.hint("rebalance")
+        else df
+      // write.sort-order (Iceberg's table sort order, applied AT INGEST):
+      // cluster + locally sort every write so data files carry tight,
+      // near-disjoint column ranges from the first commit — parquet
+      // row-group skipping then works on the sort key without waiting
+      // for a sorted compaction pass. Unpartitioned tables also get a
+      // RANGE distribution (files in the dir become range-disjoint);
+      // partitioned writes keep the leaf-rebalance distribution and sort
+      // within tasks. `zorder(a,b,...)` sorts on the interleaved-bit
+      // curve ranked within THIS batch's bounds (one extra agg pass over
+      // the batch), so multi-dimension row-group skipping works from
+      // ingest. Missing/unsortable columns are ignored.
+      val ZOrderSpec = "(?i)\\s*zorder\\(([^)]*)\\)\\s*".r
+      val sortExprs: Seq[Column] = props.get("write.sort-order") match {
+        case Some(ZOrderSpec(inner)) =>
+          val zc = inner.split(",").toSeq.map(_.trim)
+            .filter(c => c.nonEmpty && df.schema.fieldNames.contains(c))
+          if (zc.size >= 2) zOrderExpr(df, zc).toSeq else Nil
+        case Some(cols) => cols.split(",").toSeq.map(_.trim)
+          .filter(c => c.nonEmpty && df.schema.fieldNames.contains(c)).map(col)
+        case None => Nil
+      }
       if (sortExprs.isEmpty) distributed
       else if (partitionCols.isEmpty)
         df.repartitionByRange(sortExprs: _*)
@@ -240,6 +245,7 @@ class LakeTable(
         // the key order inside each leaf file survives; a bare
         // sort(sortCols) would be re-sorted by the writer
         distributed.sortWithinPartitions(partitionCols.map(col) ++ sortExprs: _*)
+    }
     val (filesByLeaf, harvested) =
       writeDir(out, abs, partitionCols, df.schema, props, needRows = partitionCols.isEmpty)
     // an empty unpartitioned write (e.g. a delete that emptied its
@@ -369,8 +375,9 @@ class LakeTable(
   }
 
   /** The one write step behind [[writeData]] and [[writeDeleteFile]]:
-    * write `out` as parquet at `abs` through [[StoreWrite]], list the
-    * fresh dir ONCE, check that listing against the write's own
+    * write `out` as parquet at `abs` through [[StoreWrite]] (on the
+    * driver for rows it holds, else a Spark write), list the fresh dir
+    * ONCE, check that listing against the write's own
     * committed-file count ([[validateHarvest]]), and [[harvest]] the
     * footer stats of each leaf ("" for an unpartitioned write). Returns
     * the listing (the bloom-floor byte probe reads it too) and the
@@ -403,14 +410,14 @@ class LakeTable(
     *    coordinator-accepted attempts only) and a surplus fails the
     *    write BEFORE the manifest commit, leaving an orphan dir. */
   private def writeDir(
-      out: DataFrame,
+      out: Either[StoreWrite.Local, DataFrame],
       abs: String,
       partitionCols: Seq[String],
       schema: StructType,
       props: Map[String, String],
       needRows: Boolean): (Seq[(String, Seq[FileStatus])], Seq[(String, (Map[String, (String, String)], Long))]) = {
     val reported = StoreTiming.time("data.parquet-write")(
-      StoreWrite.parquet(out, abs, partitionCols))
+      out.fold(StoreWrite.parquet(_, abs, partitionCols), StoreWrite.parquet(_, abs, partitionCols)))
     // ONE recursive listing of the fresh dir feeds the validation
     // count, the footer-stats harvest AND the bloom-floor byte probe:
     // on an object store every recursive walk is a round-trip per
@@ -1442,7 +1449,10 @@ class LakeTable(
   private def writeDeleteFile(src: DataFrame, keys: Seq[String], s: Snapshot): ManifestEntry =
       StoreConf.bytesFirstCoalesce(spark) {
     val types = s.schema.fields.map(f => f.name -> f.dataType).toMap
-    val keyDf = src.select(keys.map(k => col(k).cast(types(k)).as(k)): _*).distinct()
+    val keyDf = src.select(keys.map(k => col(k).cast(types(k)).as(k)): _*)
+    // key rows the driver holds are deduplicated there, under the
+    // normalization the delete-key mask compares with
+    val out = StoreWrite.local(keyDf).map(_.distinctKeys).toLeft(keyDf.distinct())
     // underscore prefix = Hadoop/Spark hidden-path convention: generic
     // listings (readStream's recursive file stream, an ad-hoc
     // spark.read.parquet over the data root) skip delete files
@@ -1453,7 +1463,7 @@ class LakeTable(
     // net: a stray file here would PHANTOM-DELETE rows (every key tuple
     // in the dir masks), strictly worse than stray data rows
     val keySchema = StructType(s.schema.fields.filter(f => keys.contains(f.name)))
-    val (_, harvested) = writeDir(keyDf, abs, Nil, keySchema, s.properties, needRows = false)
+    val (_, harvested) = writeDir(out, abs, Nil, keySchema, s.properties, needRows = false)
     ManifestEntry(dir, None, harvested.head._2._1, StampAtCommit)
   }
 

@@ -1,23 +1,54 @@
 package org.apache.spark.sql
 
+import java.util.UUID
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.catalyst.plans.logical.CommandResult
-import org.apache.spark.sql.execution.QueryExecution
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast}
+import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, LocalRelation}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.execution.datasources.{DataSource, OutputWriter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.StringType
 
 /** The store's parquet write, returning the write's OWN committed-file
-  * count. Builds and runs the command exactly as `DataFrameWriter`'s
-  * v1 save does (`DataSource.planForWriting` under a fresh
-  * `QueryExecution`), then reads the `numFiles` SQLMetric off the
-  * executed `DataWritingCommandExec`. Spark's `BasicWriteJobStatsTracker`
-  * sums that metric from task attempts whose commit the coordinator
-  * accepted, and sets it on the driver before the command returns, so
-  * the count is there without waiting on the listener bus, and it
-  * belongs to this write alone however many other threads write at
-  * the same time. (The plan node is not reachable through
+  * count, in one of two forms.
+  *
+  * A distributed frame goes through a Spark write: the command is built
+  * and run exactly as `DataFrameWriter`'s v1 save does
+  * (`DataSource.planForWriting` under a fresh `QueryExecution`), and the
+  * count is the `numFiles` SQLMetric of the executed
+  * `DataWritingCommandExec`. Spark's `BasicWriteJobStatsTracker` sums
+  * that metric from task attempts whose commit the coordinator accepted,
+  * and sets it on the driver before the command returns, so the count is
+  * there without waiting on the listener bus, and it belongs to this
+  * write alone however many other threads write at the same time.
+  *
+  * Rows the driver already holds ([[Local]], from [[local]]) are written
+  * on the driver with no job: the objects a write task uses
+  * (`ParquetFileFormat.prepareWrite`, then `OutputWriterFactory` and
+  * `OutputWriter`), so the session's codec, timestamp type and rebase
+  * settings apply unchanged, one file per leaf, Hive `k=v` leaves for a
+  * partitioned layout. A Spark write of a batch-sized frame pays
+  * analysis, planning, a job and a task launch for a few thousand rows;
+  * the driver write skips all four. Both land in a fresh directory that
+  * no reader sees until the table's log commit names it, so who writes
+  * the bytes does not change what a commit makes visible. The store
+  * hands a frame to the driver write only when no `write.sort-order`
+  * applies: a sort order, ZORDER included, keeps the Spark write, whose
+  * range split and ranking are jobs of their own.
+  *
+  * (The plan node and the write-task objects are not reachable through
   * `DataFrameWriter`; this file sits in `org.apache.spark.sql` for the
   * `private[sql]` members it names, like `ListenerBusDrain` does.) */
 object StoreWrite extends AdaptiveSparkPlanHelper {
@@ -26,6 +57,54 @@ object StoreWrite extends AdaptiveSparkPlanHelper {
     * executed plan: Spark's plan shape drifted). Expected 0; `graft.Bench`
     * reports the delta over a run. */
   val unreadCounts = new AtomicLong()
+
+  /** Driver-side writes, for counting them over a run. */
+  val localWrites = new AtomicLong()
+
+  /** A frame's rows, held by the driver, with the frame's columns. */
+  final case class Local(session: classic.SparkSession, output: Seq[Attribute], rows: Seq[InternalRow]) {
+
+    /** The distinct rows under the key normalization the delete-key mask
+      * compares with (`DeleteKeyMask.tuple`: null equals null, NaN
+      * equals NaN, -0.0 equals 0.0), each written normalized, as a
+      * Spark `distinct` writes its grouping keys. */
+    def distinctKeys: Local = {
+      val n = output.size
+      val kept = new java.util.LinkedHashSet[Any]()
+      rows.foreach(r => kept.add(DeleteKeyMask.tuple(n)(i => r.get(i, output(i).dataType))))
+      copy(rows = kept.asScala.toSeq.map(t =>
+        if (n == 1) InternalRow(t)
+        else InternalRow.fromSeq(t.asInstanceOf[java.util.List[Any]].asScala.toSeq)))
+    }
+  }
+
+  /** `df`'s rows when the driver already holds them: its optimized plan
+    * is a `LocalRelation` (local rows under projections and filters the
+    * optimizer folds into them). None for any other frame, and a plan
+    * with a leaf that is not local is not optimized here. Check the
+    * frame before adding a repartition hint or an aggregate: either
+    * keeps the plan from folding. */
+  def local(df: DataFrame): Option[Local] = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    if (ds.isStreaming ||
+        !ds.logicalPlan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else ds.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(Local(ds.sparkSession, l.output, l.data))
+      case _ => None
+    }
+  }
+
+  /** Collects `df` to the driver (one job) as a frame over a
+    * `LocalRelation` of its rows, which [[local]] then finds. The rows
+    * stay in Spark's internal form: no value passes through a Java type
+    * on the way. */
+  def collectLocal(df: DataFrame): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val qe = ds.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+    classic.Dataset.ofRows(ds.sparkSession,
+      LocalRelation(DataTypeUtils.toAttributes(ds.schema), rows.toIndexedSeq))
+  }
 
   /** Write `df` as parquet at `path` (error if it exists), Hive-partitioned
     * by `partitionCols`, with the v2 file output committer. Returns the
@@ -48,4 +127,63 @@ object StoreWrite extends AdaptiveSparkPlanHelper {
     if (count.isEmpty) unreadCounts.incrementAndGet()
     count
   }
+
+  /** Write `local`'s rows as parquet at `path` on the driver, one file
+    * per leaf: Hive-partitioned by `partitionCols`, the leaf names
+    * rendered as a Spark write renders them (values cast to string in the
+    * session time zone, escaped, nulls in the default partition). Like a
+    * Spark write, an unpartitioned write of no rows leaves one file
+    * carrying the schema. Returns the count of files written. */
+  def parquet(local: Local, path: String, partitionCols: Seq[String]): Option[Long] =
+    local.session.withActive {
+      val session = local.session
+      val (partAttrs, dataAttrs) = local.output.partition(a => partitionCols.contains(a.name))
+      require(partAttrs.size == partitionCols.size,
+        s"partition columns ${partitionCols.mkString(",")} not all in the written frame")
+      val options = Map("path" -> path)
+      val job = Job.getInstance(session.sessionState.newHadoopConfWithOptions(options))
+      val dataSchema = DataTypeUtils.fromAttributes(dataAttrs)
+      // sets the write support, schema, codec and datetime settings on
+      // the job's conf, which the writers read through the task context
+      val factory = new ParquetFileFormat().prepareWrite(session, job, options, dataSchema)
+      val conf = job.getConfiguration
+      val context = new TaskAttemptContextImpl(conf, new TaskAttemptID(
+        new TaskID(new JobID(UUID.randomUUID().toString.take(8), 0), TaskType.MAP, 0), 0))
+      val fileName = s"part-00000-${UUID.randomUUID()}-c000${factory.getFileExtension(context)}"
+
+      val leafOf: InternalRow => String =
+        if (partAttrs.isEmpty) _ => ""
+        else {
+          val tz = Some(session.sessionState.conf.sessionLocalTimeZone)
+          val renders = partAttrs.map { a =>
+            val cast = Cast(BoundReference(local.output.indexOf(a), a.dataType, a.nullable), StringType, tz)
+            (r: InternalRow) =>
+              ExternalCatalogUtils.getPartitionPathString(a.name, Option(cast.eval(r)).map(_.toString).orNull)
+          }
+          r => renders.map(_(r)).mkString("/")
+        }
+      val dataIdx = dataAttrs.map(local.output.indexOf(_)).toArray
+      val dataTypes = dataAttrs.map(_.dataType).toArray
+      val project: InternalRow => InternalRow =
+        if (partAttrs.isEmpty) identity
+        else r => InternalRow.fromSeq(dataIdx.indices.map(i => r.get(dataIdx(i), dataTypes(i))))
+
+      val writers = new java.util.LinkedHashMap[String, OutputWriter]()
+      def writerFor(leaf: String): OutputWriter = writers.computeIfAbsent(leaf, l =>
+        factory.newInstance(
+          if (l.isEmpty) s"$path/$fileName" else s"$path/$l/$fileName", dataSchema, context))
+      try {
+        if (partAttrs.isEmpty) writerFor("")
+        local.rows.foreach(r => writerFor(leafOf(r)).write(project(r)))
+      } catch {
+        case t: Throwable =>
+          writers.values.forEach(w => try w.close() catch { case c: Throwable => t.addSuppressed(c) })
+          throw t
+      }
+      writers.values.forEach(_.close())
+      // no leaf, no file: the dir still exists, as after a Spark write
+      if (writers.isEmpty) new Path(path).getFileSystem(conf).mkdirs(new Path(path))
+      localWrites.incrementAndGet()
+      Some(writers.size.toLong)
+    }
 }

@@ -215,15 +215,8 @@ class CdcPipelineSpec extends SparkSpec {
     wm.getLong(wm.fieldIndex("batch_id")) shouldBe 5L
   }
 
-  test("a merge-on-read batch with upserts and deletes runs a pinned number of Spark jobs") {
-    val (cat, ctx) = bootstrap()
-    cat.table("svc_store.tb_item").setProperties(Map(
-      "write.merge.mode" -> "merge-on-read",
-      "write.delete.mode" -> "merge-on-read"))
-    val batch = batchDf(Seq(
-      (1, 2, keyBytes(2), valueBytes("u", 2, "b2", 21.0, 1600000000000L, 1700000001000L), 10L),
-      (1, 2, keyBytes(3), valueBytes("d", 3, null, 0.0, 0L, 1700000003000L), 11L),
-      (1, 2, keyBytes(4), valueBytes("c", 4, "d", 40.0, 1600000000000L, 1700000004000L), 13L)))
+  /** The Spark jobs `body` runs on this thread (counted under one job group). */
+  private def jobsOf(body: => Unit): Int = {
     val group = "cdc-batch-jobs"
     val jobs = new AtomicInteger()
     val listener = new SparkListener {
@@ -236,17 +229,84 @@ class CdcPipelineSpec extends SparkSpec {
     try {
       ListenerBusDrain(sc)
       sc.setJobGroup(group, "one CDC batch")
-      try CdcPipeline.processBatch(batch, 1L, ctx)
+      try body
       finally sc.clearJobGroup()
       ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  private def morBootstrap(): (LakeCatalog, PipelineContext) = {
+    val (cat, ctx) = bootstrap()
+    cat.table("svc_store.tb_item").setProperties(Map(
+      "write.merge.mode" -> "merge-on-read",
+      "write.delete.mode" -> "merge-on-read"))
+    (cat, ctx)
+  }
+
+  test("a merge-on-read batch with upserts and deletes runs a pinned number of Spark jobs") {
+    val (cat, ctx) = morBootstrap()
+    val batch = batchDf(Seq(
+      (1, 2, keyBytes(2), valueBytes("u", 2, "b2", 21.0, 1600000000000L, 1700000001000L), 10L),
+      (1, 2, keyBytes(3), valueBytes("d", 3, null, 0.0, 0L, 1700000003000L), 11L),
+      (1, 2, keyBytes(4), valueBytes("c", 4, "d", 40.0, 1600000000000L, 1700000004000L), 13L)))
+    val jobs = jobsOf(CdcPipeline.processBatch(batch, 1L, ctx))
     state(cat) shouldBe Seq((1, "a", 10.0), (2, "b2", 21.0), (4, "d", 40.0))
-    // one bookkeeping aggregate, one decode and dedup of the slice (its
-    // side counts), the MERGE's data and delete-file writes, the
-    // DELETE's delete-file write and the ledger append: 10 jobs (15
-    // with a separate schema-id collect and stats aggregate, and each
-    // side decoded and probed on its own)
-    jobs.get shouldBe 10
+    // the batch's cache build, the bookkeeping aggregate's shuffle and
+    // result, the slice's decode-and-dedup shuffle and collect, and no
+    // write job: 5 (10 when the MERGE's data and delete files, the
+    // DELETE's delete file and the ledger row were each a Spark write)
+    jobs shouldBe 5
+  }
+
+  test("the ledger append writes its row on the driver: no Spark job") {
+    val (cat, _) = bootstrap()
+    val jobs = jobsOf(Watermark.appendCdcWatermark(cat, "dag1", "svc_store", "tb_item",
+      eventCount = 3, maxEventTs = Some(new Timestamp(1700000000000L)),
+      minOffset = Some(1L), maxOffset = Some(3L), batchId = Some(9L)))
+    jobs shouldBe 0
+    Watermark.lastCdcBatch(cat, "dag1", "svc_store", "tb_item") shouldBe Some(9L)
+    val wm = cat.table(Watermark.CdcTable).read.head()
+    wm.getLong(wm.fieldIndex("event_count")) shouldBe 3L
+    wm.getTimestamp(wm.fieldIndex("max_event_ts")) shouldBe new Timestamp(1700000000000L)
+  }
+
+  test("slices on both sides of the driver cap land the same state and ledger row") {
+    import graft.store.LakeTable
+    val (cat, ctx) = morBootstrap()
+    // slice 2 has one event past the cap, over 100 keys: upserts of
+    // keys 10..109, each key's last event at the highest offset, then
+    // deletes of keys 100..109 and of bootstrap key 3; slice 3 (under
+    // the cap, applied last) re-upserts key 10 and deletes key 1
+    val over = LakeTable.MaxDeleteReachKeys + 1
+    val slice2 = (0 until over).map { i =>
+      val id = 10 + i % 100
+      val last = i >= over - 100
+      val op = if (last && id >= 100) "d" else "u"
+      (1, 2, keyBytes(id), valueBytes(op, id, s"n$i", i.toDouble, 1600000000000L,
+        1700000000000L + i), i.toLong)
+    } :+ ((1, 2, keyBytes(3), valueBytes("d", 3, null, 0.0, 0L, 1700000000000L), over.toLong))
+    val slice3 = Seq(
+      (1, 3, keyBytes(10), valueBytes("u", 10, "newest", 7.0, 1600000000000L, 1800000000000L),
+        over + 1L),
+      (1, 3, keyBytes(1), valueBytes("d", 1, null, 0.0, 0L, 1800000000000L), over + 2L))
+    val local0 = org.apache.spark.sql.StoreWrite.localWrites.get()
+    CdcPipeline.processBatch(batchDf(slice2 ++ slice3), 4L, ctx)
+    // slice 3's MERGE and DELETE write their three files on the driver,
+    // slice 2's go through Spark; the ledger row is local either way
+    org.apache.spark.sql.StoreWrite.localWrites.get() - local0 shouldBe 4L
+
+    // the last event per key in slice 2: index over - 100 + k for key 10 + k
+    val want = (2, "b", 20.0) +: (10 until 100).map { id =>
+      val i = over - 100 + Math.floorMod(id - 10 - (over - 100), 100)
+      if (id == 10) (10, "newest", 7.0) else (id, s"n$i", i.toDouble)
+    }
+    state(cat) shouldBe want.sortBy(_._1)
+    val wm = cat.table(Watermark.CdcTable).read.head()
+    wm.getLong(wm.fieldIndex("event_count")) shouldBe over + 3L
+    wm.getLong(wm.fieldIndex("min_offset")) shouldBe 0L
+    wm.getLong(wm.fieldIndex("max_offset")) shouldBe over + 2L
+    wm.getLong(wm.fieldIndex("batch_id")) shouldBe 4L
   }
 
   test("missing target table is skipped with no failure") {

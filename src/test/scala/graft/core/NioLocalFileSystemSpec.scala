@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 
 import graft.SparkSpec
@@ -47,6 +47,34 @@ class NioLocalFileSystemSpec extends SparkSpec {
       viaOurs shouldBe viaStock
       viaOurs("dir/mode640") & 0x1ff shouldBe Integer.parseInt("640", 8)
       viaOurs("sticky") & 0x3ff shouldBe Integer.parseInt("1777", 8)
+    } finally {
+      ours.close()
+      stock.close()
+    }
+  }
+
+  test("the session's file system reports the owners, groups and permissions the stock one does") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ours = FileSystem.newInstance(URI.create("file:///"), conf)
+    val stock = new LocalFileSystem()
+    stock.initialize(URI.create("file:///"), conf)
+    try {
+      val root = Files.createTempDirectory("nio-status").toString
+      createdModes(stock, root)
+      val rootPath = new Path(s"file://$root")
+      def ownership(st: FileStatus) = (st.getPath.getName, st.getOwner, st.getGroup, st.getPermission)
+      def walk(fs: FileSystem, p: Path): Seq[FileStatus] =
+        fs.listStatus(p).toSeq.flatMap(st => st +: (if (st.isDirectory) walk(fs, st.getPath) else Nil))
+      val viaOurs = walk(ours, rootPath)
+      // answered through java.nio, not the stock status's `ls -ld`
+      all(viaOurs) shouldBe a[NioLocalFileSystem.Status]
+      viaOurs.map(ownership).sortBy(_._1) shouldBe walk(stock, rootPath).map(ownership).sortBy(_._1)
+      viaOurs.map(_.getPermission.getStickyBit) should contain(true)
+      Seq("plain", "dir/mode640", "sticky").foreach { rel =>
+        val p = new Path(s"file://$root/$rel")
+        ownership(ours.getFileStatus(p)) shouldBe ownership(stock.getFileStatus(p))
+      }
+      ours.getFileStatus(rootPath).getOwner shouldBe System.getProperty("user.name")
     } finally {
       ours.close()
       stock.close()

@@ -47,6 +47,71 @@ class StoreModelSpec extends SparkSpec {
       "write.sort-order" -> "id"))
   }
 
+  test("local and distributed frames land the same tables, files, stats and sidecars") {
+    // the same steps on two tables: one fed frames whose rows the driver
+    // holds (written there), one fed the same rows through a Spark
+    // partition (a Spark write); every step must leave them equal
+    import org.apache.spark.sql.StoreWrite
+    def bytes(t: LakeTable, e: ManifestEntry, c: String): Seq[Byte] =
+      Files.readAllBytes(java.nio.file.Paths.get(
+        s"${t.location}/blooms/${e.dir}/${e.partition.fold("")(_ + "/")}$c.bloom")).toSeq
+    // a copy-on-write step writes a join of the source and the table
+    // through Spark on both sides, in as many files as the join's
+    // partitions, which follow the source's shape: its leaves compare,
+    // not its file counts
+    def layout(t: LakeTable, fileCounts: Boolean) = {
+      val s = t.currentSnapshot.get
+      val files = t.filesDF.select("partition", "content").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+      (s.entries.map(e => (e.partition, e.stats, e.blooms, e.blooms.map(bytes(t, e, _)))),
+        s.deleteEntries.map(e => (e.partition, e.stats)),
+        if (fileCounts) files else files.distinct)
+    }
+    // amounts as strings: NaN equals NaN, -0.0 differs from 0.0
+    def contents(t: LakeTable) = t.read.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2).toString, r.get(3).toString.toLong))
+      .toSeq.sorted
+
+    val bloomed = Map("write.bloom.columns" -> "id,status", "write.bloom.expected-items" -> "1000")
+    Seq[(String, Option[(String, Int)])]("unpartitioned" -> None, "bucketed" -> Some("id" -> 4))
+      .foreach { case (name, bucketBy) =>
+        val cat = new LakeCatalog(spark, Files.createTempDirectory(s"store-paths-$name").toString)
+        val tables = Seq(true, false).map(local => local -> cat.table(s"db.${name}_$local"))
+        def frame(local: Boolean, rows: Seq[Row3]) = if (local) df(rows) else df(rows).coalesce(1)
+        val rows0 = (1L to 40L).map(i => i -> ((s"v$i", i * 1.0)))
+        val steps: Seq[(String, (LakeTable, Boolean) => Any)] = Seq(
+          "create" -> ((t, l) =>
+            t.createOrReplace(frame(l, rows0), tableProperties = bloomed, bucketBy = bucketBy)),
+          "append" -> ((t, l) =>
+            t.append(frame(l, (100L to 103L).map(i => i -> ((s"a$i", -0.0)))))),
+          "mor-merge" -> ((t, l) => t.mergeIntoMoR(frame(l,
+            Seq(3L, 5L, 40L, 101L).map(i => i -> (("m", Double.NaN))) :+ (200L -> (("n", 2.5)))),
+            Seq("id"))),
+          "mor-delete" -> ((t, l) => t.deleteWhereExistsMoR(
+            frame(l, Seq(7L, 7L, 8L, 102L).map(i => i -> (("", 0.0)))).select("id"), Seq("id"))),
+          "cow-merge" -> ((t, l) => t.mergeInto(frame(l,
+            Seq(9L, 300L).map(i => i -> (("c", 1.0)))), Seq("id"))),
+          "cow-delete" -> ((t, l) => t.deleteWhereExists(
+            frame(l, Seq(10L, 11L).map(i => i -> (("", 0.0)))).select("id"), Seq("id"))))
+        steps.foreach { case (op, step) =>
+          val writes = tables.map { case (local, t) =>
+            val w0 = StoreWrite.localWrites.get()
+            step(t, local)
+            StoreWrite.localWrites.get() - w0
+          }
+          withClue(s"$name $op: ") {
+            // the distributed side never writes on the driver; the local
+            // side does wherever the written frame is the caller's own
+            writes(1) shouldBe 0L
+            if (!op.startsWith("cow")) writes(0) should be > 0L
+            val Seq(l, d) = tables.map(_._2)
+            contents(l) shouldBe contents(d)
+            layout(l, !op.startsWith("cow")) shouldBe layout(d, !op.startsWith("cow"))
+          }
+        }
+      }
+  }
+
   private def runSequence(seed: Long, props: Map[String, String]): Unit = {
     val rnd = new scala.util.Random(seed)
     val cat = new LakeCatalog(spark,
