@@ -146,9 +146,11 @@ object CdcQueries {
 
   /** c11: the Avro decode path itself under the oracle gate — a
     * deterministic sample of orders is Avro-encoded (binary envelope
-    * bodies built with the avro runtime), decoded in the executors by
-    * graft.avro.AvroDecode (FAILFAST, per-partition reader reuse), and
-    * the projected fields must hash-match the relational oracle. */
+    * bodies built with the avro runtime), decoded by
+    * graft.avro.AvroDecode (FAILFAST, one reused reader) on the driver,
+    * since the sample is a local frame, and the projected fields must
+    * hash-match the relational oracle. `AvroDecodeSpec` checks that the
+    * executors' per-partition decode gives the same rows. */
   private def c11(s: SparkSession, dir: String): DataFrame = {
     import org.apache.avro.generic.GenericData
     val schemaJson =

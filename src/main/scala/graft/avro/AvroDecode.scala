@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericRecord}
-import org.apache.avro.io.DecoderFactory
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, StoreWrite}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.types._
 
 /** Avro binary → Spark rows, hand-rolled on the core avro jar.
@@ -19,12 +20,14 @@ import org.apache.spark.sql.types._
   * primitives, enums, fixed, arrays, maps, and Connect decimals
   * (bytes + logicalType decimal → DecimalType).
   *
-  * Decoding is per-partition `mapPartitions` work: the schema is parsed
-  * and the `GenericDatumReader`/decoder allocated once per partition,
-  * then reused row by row — the same execution shape as spark-avro's own
-  * deserializer (binary Avro decode is inherently row-wise JVM work; it
-  * cannot be expressed as a codegen'd column expression). Map-side only,
-  * no shuffle.
+  * Decoding is row-wise JVM work (binary Avro decode cannot be expressed
+  * as a codegen'd column expression): one decoder parses the schema and
+  * allocates the `GenericDatumReader`/decoder once, then reuses them row
+  * by row — the same execution shape as spark-avro's own deserializer.
+  * A distributed frame runs it per partition in `mapPartitions`
+  * (map-side only, no shuffle); rows the driver already holds, such as
+  * a CDC batch of a few thousand events, run the same decoder on the
+  * driver, with no Spark job.
   */
 object AvroDecode {
 
@@ -103,34 +106,51 @@ object AvroDecode {
       }
   }
 
+  /** One column's decoder: the schema is parsed and the reader and
+    * decoder allocated once, then reused value by value. Not
+    * thread-safe: one per partition, or per pass on the driver. */
+  private final class Decoder(schemaJson: String, binaryCol: String) {
+    private val schema = new Schema.Parser().parse(schemaJson)
+    private val reader = new GenericDatumReader[GenericRecord](schema)
+    private var decoder: BinaryDecoder = null
+
+    /** The payload as an external row value; null for a null payload,
+      * FAILFAST on a malformed one. */
+    def apply(bytes: Array[Byte]): Any =
+      if (bytes == null) null
+      else
+        try {
+          decoder = DecoderFactory.get().binaryDecoder(bytes, decoder)
+          toRowValue(reader.read(null, decoder), schema)
+        } catch {
+          case e: Exception =>
+            throw new RuntimeException(
+              s"Malformed Avro record in column '$binaryCol' (mode=FAILFAST)", e)
+        }
+  }
+
   /** Decode `binaryCol` (raw Avro body, header already stripped) with
     * `schemaJson` into a new struct column `as`, FAILFAST on malformed
-    * input. Other columns pass through. */
+    * input. Other columns pass through. Rows the driver already holds
+    * (`StoreWrite.local`) are decoded there, with no job, into a frame
+    * over a `LocalRelation`; a malformed one then fails this call. */
   def withDecoded(df: DataFrame, binaryCol: String, schemaJson: String, as: String): DataFrame = {
     val inSchema = df.schema
     val idx = inSchema.fieldIndex(binaryCol)
-    val avroSchema = new Schema.Parser().parse(schemaJson)
-    val outSchema = StructType(
-      inSchema.fields :+ StructField(as, toSqlType(avroSchema), nullable = true))
-    df.mapPartitions { rows =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val reader = new GenericDatumReader[GenericRecord](schema)
-      var decoder: org.apache.avro.io.BinaryDecoder = null
-      rows.map { row =>
-        val bytes = row.getAs[Array[Byte]](idx)
-        val decoded =
-          if (bytes == null) null
-          else
-            try {
-              decoder = DecoderFactory.get().binaryDecoder(bytes, decoder)
-              toRowValue(reader.read(null, decoder), schema)
-            } catch {
-              case e: Exception =>
-                throw new RuntimeException(
-                  s"Malformed Avro record in column '$binaryCol' (mode=FAILFAST)", e)
-            }
-        Row.fromSeq(row.toSeq :+ decoded)
-      }
-    }(Encoders.row(outSchema))
+    val sqlType = toSqlType(new Schema.Parser().parse(schemaJson))
+    val outSchema = StructType(inSchema.fields :+ StructField(as, sqlType, nullable = true))
+    StoreWrite.local(df) match {
+      case Some(held) =>
+        val decode = new Decoder(schemaJson, binaryCol)
+        val toInternal = CatalystTypeConverters.createToCatalystConverter(sqlType)
+        val types = held.output.map(_.dataType)
+        StoreWrite.frame(held.session, outSchema, held.rows.map(row =>
+          InternalRow.fromSeq(row.toSeq(types) :+ toInternal(decode(row.getBinary(idx))))))
+      case None =>
+        df.mapPartitions { rows =>
+          val decode = new Decoder(schemaJson, binaryCol)
+          rows.map(row => Row.fromSeq(row.toSeq :+ decode(row.getAs[Array[Byte]](idx))))
+        }(Encoders.row(outSchema))
+    }
   }
 }

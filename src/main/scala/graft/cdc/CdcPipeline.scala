@@ -2,8 +2,13 @@ package graft.cdc
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession, StoreWrite}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, StoreWrite}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{DateFormatClass, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, TimestampType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.avro.AvroDecode
@@ -137,18 +142,25 @@ object CdcPipeline {
     * id order (so the newest version's MERGE lands last and wins);
     * then track, and append the batch-stats watermark row.
     *
-    * Each slice's latest-per-key frame, with its `__op`, is computed
-    * once: the decode → cast → window-dedup lineage runs in one job,
-    * and the MERGE (`cdc_pipeline.py:211-237`) and the DELETE
-    * (`:239-251`) read filters of its result. A slice of at most
-    * [[LakeTable.MaxDeleteReachKeys]] events is collected to the
-    * driver: both sides are counted there, and the store writes the
-    * MERGE's data and delete files and the DELETE's delete file there,
-    * with no job. A larger slice is persisted; one aggregate counts
-    * both sides and the writes are Spark jobs. The reference stages
-    * both through global temp views; those are shared by every topic
-    * thread, so two same-named tables in different schemas would race
-    * on one view name — the frames go straight to the table instead. */
+    * A batch frame over at most [[LakeTable.MaxDeleteReachKeys]] rows
+    * the driver holds (`StoreWrite.local`: what perfbench and the tests
+    * build) runs on the driver end to end, with no Spark job: its
+    * bookkeeping rows are counted there, each slice is decoded and
+    * deduplicated there (`AvroDecode.withDecoded`,
+    * `Transforms.latestPerKey`), its sides are counted from the held
+    * rows, and the store writes the MERGE's data and delete files and
+    * the DELETE's delete file there. Any other batch frame (what
+    * foreachBatch over Kafka or files gives, or a larger held one) is
+    * persisted, one aggregate gives its bookkeeping rows, and it is
+    * applied slice by slice: a slice of at most that many events is
+    * collected raw, in one job, and goes on as held rows; a larger one
+    * is persisted, decoded and deduplicated by Spark, and its sides
+    * counted by one aggregate. The MERGE (`cdc_pipeline.py:211-237`)
+    * and the DELETE (`:239-251`) read filters of one latest-per-key
+    * frame. The reference stages both through global temp views; those
+    * are shared by every topic thread, so two same-named tables in
+    * different schemas would race on one view name — the frames go
+    * straight to the table instead. */
   def processBatch(batchDf: DataFrame, batchId: Long, ctx: PipelineContext): Unit = {
     val startNs = System.nanoTime()
     val table = ctx.catalog.table(ctx.fullTableName)
@@ -167,73 +179,30 @@ object CdcPipeline {
     }
 
     logger.info(s"<batch-$batchId> Processing ${ctx.topic}")
-    batchDf.persist(StorageLevel.MEMORY_AND_DISK)
     // the batch's frames are batch-sized store inputs: coalesce them
     // bytes-first, as the store's own actions are (see StoreConf)
     val pairs = StoreConf.bytesFirstCoalesce(batchDf.sparkSession) {
-      try {
-        val rows = batchDf.groupBy("value_schema_id", "key_schema_id").agg(
-          count(lit(1)),
-          date_format(max("timestamp"), "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-          min("offset"),
-          max("offset")).collect()
-        val idPairs = rows.map(r => (r.getInt(0), r.getInt(1)))
-        val schemaOf = idPairs.flatMap(p => Seq(p._1, p._2)).distinct
-          .map(id => id -> ctx.schemaRegistry.getSchema(id)).toMap
-        // value id → its smallest paired key id, in ascending value-id
-        // order: old versions first, so the newest version's MERGE wins
-        val slices = idPairs.groupBy(_._1).view.mapValues(_.map(_._2).min)
-          .toSeq.sortBy(_._1)
-
-        logger.info(s"${ctx.topic} | Key Schema Ids: ${idPairs.map(_._2).distinct.toSeq} | " +
-          s"Value Schema Ids: ${slices.map(_._1)}")
-
-        // a slice's events, from the bookkeeping rows: its latest-per-key
-        // rows are at most that many
-        val eventsOf = rows.groupMapReduce(_.getInt(0))(_.getLong(2))(_ + _)
-        def mergeAndDelete(changes: DataFrame, upsertCount: Long, deleteCount: Long): Unit = {
-          if (upsertCount > 0) {
-            logger.info(s"Executing Merge Into for ${table.name}")
-            // honors write.merge.mode: COW (default) or merge-on-read — the
-            // reference's commented per-table switch (iceberg.py:78-84)
-            table.upsert(upserts(changes), Seq("id_iceberg"))
-          }
-          if (deleteCount > 0) {
-            logger.info(s"Executing Delete for ${table.name}")
-            table.deleteMatching(deletes(changes).select("id_iceberg"), Seq("id_iceberg"))
-          }
-        }
-
-        for ((valueSchemaId, keySchemaId) <- slices) {
-          val schemaFiltered = batchDf.filter(col("value_schema_id") === valueSchemaId)
-          val valueSchemaStr = schemaOf(valueSchemaId)
-          val keySchemaStr = schemaOf(keySchemaId)
-          latestChanges(schemaFiltered, keySchemaStr, valueSchemaStr,
-            DebeziumSchema.extract(valueSchemaStr),
-            DebeziumSchema.keyColumns(keySchemaStr), table)
-            .foreach { changes =>
-              if (eventsOf(valueSchemaId) <= LakeTable.MaxDeleteReachKeys) {
-                // as many rows as the driver holds for a read's delete
-                // keys: collected in one job, both sides counted here, and
-                // the store writes them on the driver
-                val local = StoreWrite.collectLocal(changes)
-                val ops = local.select("__op").collect().map(_.getString(0))
-                mergeAndDelete(local, ops.count(op => op != null && op != "d"), ops.count(_ == "d"))
-              } else {
-                val cached = changes.persist(StorageLevel.MEMORY_AND_DISK)
-                try {
-                  val sides = cached.agg(
-                    count(when(!isDelete, true)), count(when(isDelete, true))).head()
-                  mergeAndDelete(cached, sides.getLong(0), sides.getLong(1))
-                } finally cached.unpersist(false)
-              }
-            }
-        }
-
-        ctx.tracker.foreach(_.mark(ctx.fullTableName))
-        rows
-      } finally batchDf.unpersist()
+      StoreWrite.local(batchDf).filter(h => h.rows.size <= LakeTable.MaxDeleteReachKeys &&
+        Bookkeeping.forall { case (c, t) => h.indexOf(c).exists(h.output(_).dataType == t) }
+      ) match {
+        case Some(held) =>
+          val rows = bookkeeping(held)
+          applySlices(held.toDF, rows, ctx, table)
+          rows
+        case None =>
+          batchDf.persist(StorageLevel.MEMORY_AND_DISK)
+          try {
+            val rows = batchDf.groupBy("value_schema_id", "key_schema_id").agg(
+              count(lit(1)),
+              date_format(max("timestamp"), TsFormat),
+              min("offset"),
+              max("offset")).collect()
+            applySlices(batchDf, rows, ctx, table)
+            rows
+          } finally batchDf.unpersist()
+      }
     }
+    ctx.tracker.foreach(_.mark(ctx.fullTableName))
 
     // the batch's statistics, folded from its per-pair rows: the
     // timestamp strings are fixed-width, so their string max is the
@@ -248,6 +217,102 @@ object CdcPipeline {
       batchId = Some(batchId),
       processingDurationSec = Some((System.nanoTime() - startNs) / 1e9),
       scheduledAt = ctx.scheduledAt)
+  }
+
+  private val TsFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+
+  /** The batch columns the bookkeeping reads, with their contract types. */
+  private val Bookkeeping = Seq("value_schema_id" -> IntegerType, "key_schema_id" -> IntegerType,
+    "timestamp" -> TimestampType, "offset" -> LongType)
+
+  /** The bookkeeping aggregate's rows over a batch the driver holds: per
+    * (value, key) schema-id pair, the event count, the latest
+    * `timestamp` through `date_format` in the session time zone, and the
+    * least and greatest offset, nulls skipped as the aggregates skip
+    * them. */
+  private def bookkeeping(held: StoreWrite.Local): Array[Row] = {
+    val Seq(vid, kid, ts, off) = Bookkeeping.map(c => held.indexOf(c._1).get)
+    def opt(r: InternalRow, i: Int) = Option.unless(r.isNullAt(i))(r.getLong(i))
+    def int(r: InternalRow, i: Int): Any = if (r.isNullAt(i)) null else r.getInt(i)
+    val acc = new java.util.LinkedHashMap[(Any, Any), (Long, Option[Long], Option[Long], Option[Long])]()
+    held.rows.foreach { r =>
+      val (n, t, lo, hi) = acc.getOrDefault((int(r, vid), int(r, kid)), (0L, None, None, None))
+      val o = opt(r, off)
+      acc.put((int(r, vid), int(r, kid)), (n + 1, (t ++ opt(r, ts)).maxOption,
+        (lo ++ o).minOption, (hi ++ o).maxOption))
+    }
+    val tz = Some(held.session.sessionState.conf.sessionLocalTimeZone)
+    def render(micros: Long) =
+      DateFormatClass(Literal(micros, TimestampType), Literal(TsFormat), tz).eval().toString
+    acc.asScala.map { case ((v, k), (n, t, lo, hi)) =>
+      Row(v, k, n, t.map(render).orNull, lo.map(Long.box).orNull, hi.map(Long.box).orNull)
+    }.toArray
+  }
+
+  /** Applies a batch's slices: a slice of at most
+    * [[LakeTable.MaxDeleteReachKeys]] events goes on as rows the driver
+    * holds (collected raw, in one job, unless `batch` holds them
+    * already); a larger one is persisted. */
+  private def applySlices(batch: DataFrame, rows: Array[Row],
+      ctx: PipelineContext, table: LakeTable): Unit = {
+    val idPairs = rows.map(r => (r.getInt(0), r.getInt(1)))
+    val schemaOf = idPairs.flatMap(p => Seq(p._1, p._2)).distinct
+      .map(id => id -> ctx.schemaRegistry.getSchema(id)).toMap
+    // value id → its smallest paired key id, in ascending value-id
+    // order: old versions first, so the newest version's MERGE wins
+    val slices = idPairs.groupBy(_._1).view.mapValues(_.map(_._2).min)
+      .toSeq.sortBy(_._1)
+
+    logger.info(s"${ctx.topic} | Key Schema Ids: ${idPairs.map(_._2).distinct.toSeq} | " +
+      s"Value Schema Ids: ${slices.map(_._1)}")
+
+    // a slice's events, from the bookkeeping rows: its latest-per-key
+    // rows are at most that many
+    val eventsOf = rows.groupMapReduce(_.getInt(0))(_.getLong(2))(_ + _)
+    def mergeAndDelete(changes: DataFrame, upsertCount: Long, deleteCount: Long): Unit = {
+      if (upsertCount > 0) {
+        logger.info(s"Executing Merge Into for ${table.name}")
+        // honors write.merge.mode: COW (default) or merge-on-read — the
+        // reference's commented per-table switch (iceberg.py:78-84)
+        table.upsert(upserts(changes), Seq("id_iceberg"))
+      }
+      if (deleteCount > 0) {
+        logger.info(s"Executing Delete for ${table.name}")
+        table.deleteMatching(deletes(changes).select("id_iceberg"), Seq("id_iceberg"))
+      }
+    }
+
+    val batchHeld = StoreWrite.local(batch).isDefined
+    for ((valueSchemaId, keySchemaId) <- slices) {
+      val schemaFiltered = batch.filter(col("value_schema_id") === valueSchemaId)
+      val held = eventsOf(valueSchemaId) <= LakeTable.MaxDeleteReachKeys
+      val valueSchemaStr = schemaOf(valueSchemaId)
+      val keySchemaStr = schemaOf(keySchemaId)
+      latestChanges(
+        if (held && !batchHeld) StoreWrite.collectLocal(schemaFiltered) else schemaFiltered,
+        keySchemaStr, valueSchemaStr,
+        DebeziumSchema.extract(valueSchemaStr),
+        DebeziumSchema.keyColumns(keySchemaStr), table)
+        .foreach { changes =>
+          if (held) {
+            // as many rows as the driver holds for a read's delete keys:
+            // both sides counted here, and the store writes them on the
+            // driver (collected once if their plan did not fold)
+            val local = StoreWrite.local(changes)
+              .getOrElse(StoreWrite.local(StoreWrite.collectLocal(changes)).get)
+            val op = local.indexOf("__op").get
+            val ops = local.rows.map(r => if (r.isNullAt(op)) null else r.getUTF8String(op).toString)
+            mergeAndDelete(local.toDF, ops.count(o => o != null && o != "d"), ops.count(_ == "d"))
+          } else {
+            val cached = changes.persist(StorageLevel.MEMORY_AND_DISK)
+            try {
+              val sides = cached.agg(
+                count(when(!isDelete, true)), count(when(isDelete, true))).head()
+              mergeAndDelete(cached, sides.getLong(0), sides.getLong(1))
+            } finally cached.unpersist(false)
+          }
+        }
+    }
   }
 
   /** Strip the Confluent wire header and surface the schema ids — the

@@ -1,6 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, DeleteKeyMask, StoreWrite}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Descending, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -85,18 +90,45 @@ object Transforms {
     * within a topic-partition; synthetic data can).
     *
     * Scale: one hash-partition shuffle on the key + in-partition sort —
-    * exactly the minimal work for "latest per key" and AQE-coalescible. */
+    * exactly the minimal work for "latest per key" and AQE-coalescible.
+    * Rows the driver already holds (`StoreWrite.local`) are deduplicated
+    * there, with no job, under the window's semantics: `orderCol`, then
+    * each `tieBreak`, descending with nulls last, and keys grouped as
+    * Spark groups them (null equals null, NaN equals NaN, -0.0 equals
+    * 0.0); a full tie keeps the first row met, where the window keeps
+    * any one. Key types the delete-key mask cannot compare keep the
+    * window. */
   def latestPerKey(
       df: DataFrame,
       keyCols: Seq[String],
       orderCol: String,
       tieBreak: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy((desc(orderCol) +: tieBreak.map(desc)): _*)
-    df.withColumn("__row", row_number().over(w))
-      .filter(col("__row") === 1)
-      .drop("__row")
+    val held = StoreWrite.local(df).flatMap { h =>
+      val keys = keyCols.flatMap(h.indexOf)
+      val order = (orderCol +: tieBreak).flatMap(h.indexOf)
+      Option.when(keys.size == keyCols.size && order.size == tieBreak.size + 1 &&
+          keys.forall(i => DeleteKeyMask.supported(h.output(i).dataType)))((h, keys, order))
+    }
+    held match {
+      case Some((h, keys, order)) =>
+        val keyOf = h.keyOf(keys)
+        val ordering = new InterpretedOrdering(order.map { i =>
+          SortOrder(BoundReference(i, h.output(i).dataType, h.output(i).nullable), Descending)
+        })
+        val latest = new java.util.LinkedHashMap[Any, InternalRow]()
+        h.rows.foreach { r =>
+          val k = keyOf(r)
+          val kept = latest.get(k)
+          if (kept == null || ordering.lt(r, kept)) latest.put(k, r)
+        }
+        StoreWrite.frame(h.session, df.schema, latest.values.asScala.toSeq)
+      case None =>
+        val w = Window
+          .partitionBy(keyCols.map(col): _*)
+          .orderBy((desc(orderCol) +: tieBreak.map(desc)): _*)
+        df.withColumn("__row", row_number().over(w))
+          .filter(col("__row") === 1)
+          .drop("__row")
+    }
   }
 }

@@ -11,15 +11,16 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast}
-import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, LocalRelation}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference, Cast, Expression, MutableProjection, Predicate, Unevaluable}
+import org.apache.spark.sql.catalyst.plans.logical.{CommandResult, Filter, LeafNode, LocalRelation, LogicalPlan, Project, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.{DataSource, OutputWriter}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The store's parquet write, returning the write's OWN committed-file
   * count, in one of two forms.
@@ -64,18 +65,44 @@ object StoreWrite extends AdaptiveSparkPlanHelper {
   /** A frame's rows, held by the driver, with the frame's columns. */
   final case class Local(session: classic.SparkSession, output: Seq[Attribute], rows: Seq[InternalRow]) {
 
-    /** The distinct rows under the key normalization the delete-key mask
-      * compares with (`DeleteKeyMask.tuple`: null equals null, NaN
-      * equals NaN, -0.0 equals 0.0), each written normalized, as a
-      * Spark `distinct` writes its grouping keys. */
+    /** A frame over these rows, which [[local]] finds again. */
+    def toDF: DataFrame = frame(session, DataTypeUtils.fromAttributes(output), rows)
+
+    /** The index of top-level column `name`, resolved as the session
+      * resolves names; None when there is no such column. */
+    def indexOf(name: String): Option[Int] = {
+      val resolver = session.sessionState.conf.resolver
+      Some(output.indexWhere(a => resolver(a.name, name))).filter(_ >= 0)
+    }
+
+    /** A row's key over the columns at `idx`, under the normalization
+      * Spark groups keys with and the delete-key mask compares them
+      * with (`DeleteKeyMask.tuple`: null equals null, NaN equals NaN,
+      * -0.0 equals 0.0), for key types `DeleteKeyMask.supported` admits. */
+    def keyOf(idx: Seq[Int]): InternalRow => Any = {
+      val at = idx.toArray
+      val types = at.map(output(_).dataType)
+      r => DeleteKeyMask.tuple(at.length)(i => r.get(at(i), types(i)))
+    }
+
+    /** The distinct rows under [[keyOf]]'s normalization, each written
+      * normalized, as a Spark `distinct` writes its grouping keys. */
     def distinctKeys: Local = {
       val n = output.size
+      val key = keyOf(output.indices)
       val kept = new java.util.LinkedHashSet[Any]()
-      rows.foreach(r => kept.add(DeleteKeyMask.tuple(n)(i => r.get(i, output(i).dataType))))
+      rows.foreach(r => kept.add(key(r)))
       copy(rows = kept.asScala.toSeq.map(t =>
         if (n == 1) InternalRow(t)
         else InternalRow.fromSeq(t.asInstanceOf[java.util.List[Any]].asScala.toSeq)))
     }
+  }
+
+  /** A frame over `rows` (a `LocalRelation` with `schema`'s columns),
+    * which [[local]] finds again. */
+  def frame(session: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame = {
+    val s = session.asInstanceOf[classic.SparkSession]
+    classic.Dataset.ofRows(s, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
   }
 
   /** `df`'s rows when the driver already holds them: its optimized plan
@@ -83,13 +110,72 @@ object StoreWrite extends AdaptiveSparkPlanHelper {
     * optimizer folds into them). None for any other frame, and a plan
     * with a leaf that is not local is not optimized here. Check the
     * frame before adding a repartition hint or an aggregate: either
-    * keeps the plan from folding. */
+    * keeps the plan from folding.
+    *
+    * A plan over one set of local rows is optimized with the rows set
+    * aside ([[HeldRows]] stands in for them), and the projections and
+    * filters the optimizer leaves above them run over the rows as
+    * generated code. The optimizer's own fold (`ConvertToLocalRelation`)
+    * runs them as interpreted expressions, and every rule that maps a
+    * plan's expressions also walks each row it holds: on a CDC batch of
+    * a few thousand rows those two were most of the driver's time. Any
+    * other node left above the rows goes through the optimizer's fold. */
   def local(df: DataFrame): Option[Local] = {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     if (ds.isStreaming ||
         !ds.logicalPlan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
-    else ds.queryExecution.optimizedPlan match {
+    else ds.queryExecution.withCachedData match {
       case l: LocalRelation => Some(Local(ds.sparkSession, l.output, l.data))
+      case plan => plan.collectLeaves() match {
+        case Seq(l: LocalRelation) =>
+          val held = HeldRows(l.output, l.data.size)
+          val optimized = ds.sparkSession.sessionState.optimizer.execute(
+            plan.transformUp { case r: LocalRelation if r eq l => held })
+          fold(optimized, held, l.data)
+            .map(rows => Local(ds.sparkSession, optimized.output, rows))
+            .orElse(optimizedLocal(ds))
+        case _ => optimizedLocal(ds)
+      }
+    }
+  }
+
+  private def optimizedLocal(ds: classic.Dataset[_]): Option[Local] =
+    ds.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(Local(ds.sparkSession, l.output, l.data))
+      case _ => None
+    }
+
+  /** Stands in for `rows` local rows while the plan above them is
+    * optimized, with a `LocalRelation`'s row bound and size. */
+  private case class HeldRows(output: Seq[Attribute], rows: Int) extends LeafNode {
+    override def maxRows: Option[Long] = Some(rows)
+    override def computeStats(): Statistics =
+      Statistics(sizeInBytes = EstimationUtils.getSizePerRow(output) * rows)
+  }
+
+  /** The rows of `plan`, with `data` in place of `held`, when `plan` is
+    * projections and filters over `held` (or rows the optimizer made),
+    * with no expression the optimizer's fold would leave unevaluated
+    * either; None otherwise. A projection's rows are copied out of a
+    * mutable row, as the fold copies them. */
+  private def fold(plan: LogicalPlan, held: HeldRows, data: Seq[InternalRow]): Option[Seq[InternalRow]] = {
+    def evaluable(e: Expression) =
+      !e.exists(x => x.isInstanceOf[Unevaluable] && !x.isInstanceOf[AttributeReference])
+    plan match {
+      case h: HeldRows if h eq held => Some(data)
+      case l: LocalRelation => Some(l.data)
+      case Project(list, child) if list.forall(evaluable) =>
+        fold(child, held, data).map { rows =>
+          val project = MutableProjection.create(list, child.output)
+          project.initialize(0)
+          rows.map(r => project(r).copy())
+        }
+      case Filter(cond, child) if evaluable(cond) =>
+        fold(child, held, data).map { rows =>
+          val keep = Predicate.create(cond, child.output)
+          keep.initialize(0)
+          rows.filter(keep.eval)
+        }
       case _ => None
     }
   }
@@ -102,8 +188,7 @@ object StoreWrite extends AdaptiveSparkPlanHelper {
     val ds = df.asInstanceOf[classic.Dataset[_]]
     val qe = ds.queryExecution
     val rows = SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
-    classic.Dataset.ofRows(ds.sparkSession,
-      LocalRelation(DataTypeUtils.toAttributes(ds.schema), rows.toIndexedSeq))
+    frame(ds.sparkSession, ds.schema, rows.toIndexedSeq)
   }
 
   /** Write `df` as parquet at `path` (error if it exists), Hive-partitioned

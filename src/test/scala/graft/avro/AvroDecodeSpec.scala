@@ -5,7 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.StoreWrite
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -71,35 +71,44 @@ class AvroDecodeSpec extends SparkSpec {
 
     import spark.implicits._
     val df = Seq((1, bytes1), (2, bytes2)).toDF("id", "payload")
-    val out = AvroDecode.withDecoded(df, "payload", schemaJson, "rec")
-      .orderBy("id").collect()
+    heldAndDistributed(df).foreach { case (how, in) =>
+      withClue(how) {
+        val decoded = AvroDecode.withDecoded(in, "payload", schemaJson, "rec")
+        StoreWrite.local(decoded).isDefined shouldBe (how == "held")
+        val out = decoded.orderBy("id").collect()
 
-    val r1 = out(0).getStruct(2)
-    r1.getInt(0) shouldBe 7
-    r1.getString(1) shouldBe "hello"
-    r1.getDouble(2) shouldBe 2.5
-    r1.getAs[Array[Byte]](3).toSeq shouldBe Seq[Byte](1, 2, 3)
-    r1.getDecimal(4) shouldBe new java.math.BigDecimal("1234.56")
-    r1.getStruct(5).getLong(0) shouldBe 99L
+        val r1 = out(0).getStruct(2)
+        r1.getInt(0) shouldBe 7
+        r1.getString(1) shouldBe "hello"
+        r1.getDouble(2) shouldBe 2.5
+        r1.getAs[Array[Byte]](3).toSeq shouldBe Seq[Byte](1, 2, 3)
+        r1.getDecimal(4) shouldBe new java.math.BigDecimal("1234.56")
+        r1.getStruct(5).getLong(0) shouldBe 99L
 
-    val r2 = out(1).getStruct(2)
-    r2.getInt(0) shouldBe 8
-    assert(r2.isNullAt(1) && r2.isNullAt(2) && r2.isNullAt(5))
+        val r2 = out(1).getStruct(2)
+        r2.getInt(0) shouldBe 8
+        assert(r2.isNullAt(1) && r2.isNullAt(2) && r2.isNullAt(5))
+      }
+    }
   }
 
   test("null payload decodes to null struct; FAILFAST on malformed bytes") {
     import spark.implicits._
     val df = Seq((1, null.asInstanceOf[Array[Byte]])).toDF("id", "payload")
-    val out = AvroDecode.withDecoded(df, "payload", schemaJson, "rec").collect()
-    assert(out(0).isNullAt(2))
+    val bad = Seq((1, Array[Byte](-1, -1, -1, -1, -1, -1, -1, -1))).toDF("id", "payload")
+    heldAndDistributed(df).zip(heldAndDistributed(bad)).foreach { case ((how, in), (_, badIn)) =>
+      withClue(how) {
+        val out = AvroDecode.withDecoded(in, "payload", schemaJson, "rec").collect()
+        assert(out(0).isNullAt(2))
 
-    val bad = Seq((1, Array[Byte](-1, -1, -1, -1, -1, -1, -1, -1)))
-      .toDF("id", "payload")
-    val e = intercept[Exception] {
-      AvroDecode.withDecoded(bad, "payload", schemaJson, "rec").collect()
+        val e = intercept[Exception] {
+          AvroDecode.withDecoded(badIn, "payload", schemaJson, "rec").collect()
+        }
+        // the same FAILFAST error, thrown on the driver or by a task
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+          .toSeq should contain("Malformed Avro record in column 'payload' (mode=FAILFAST)")
+      }
     }
-    e.getMessage + Option(e.getCause).map(_.getMessage).getOrElse("") should
-      include regex "(?i)(malformed|failfast|EOF|negative)"
   }
 
   test("golden Debezium envelope schema converts cleanly") {

@@ -10,7 +10,7 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.GenericData
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, StoreWrite}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -244,19 +244,30 @@ class CdcPipelineSpec extends SparkSpec {
     (cat, ctx)
   }
 
+  /** The same batch rows as a distributed frame, the kind foreachBatch
+    * over Kafka or files gives: written to parquet and read back. */
+  private def onDisk(batch: DataFrame): DataFrame = {
+    val path = Files.createTempDirectory("cdc-batch").resolve("batch").toString
+    batch.write.parquet(path)
+    val read = spark.read.parquet(path)
+    assert(StoreWrite.local(read).isEmpty)
+    read
+  }
+
   test("a merge-on-read batch with upserts and deletes runs a pinned number of Spark jobs") {
-    val (cat, ctx) = morBootstrap()
     val batch = batchDf(Seq(
       (1, 2, keyBytes(2), valueBytes("u", 2, "b2", 21.0, 1600000000000L, 1700000001000L), 10L),
       (1, 2, keyBytes(3), valueBytes("d", 3, null, 0.0, 0L, 1700000003000L), 11L),
       (1, 2, keyBytes(4), valueBytes("c", 4, "d", 40.0, 1600000000000L, 1700000004000L), 13L)))
-    val jobs = jobsOf(CdcPipeline.processBatch(batch, 1L, ctx))
-    state(cat) shouldBe Seq((1, "a", 10.0), (2, "b2", 21.0), (4, "d", 40.0))
-    // the batch's cache build, the bookkeeping aggregate's shuffle and
-    // result, the slice's decode-and-dedup shuffle and collect, and no
-    // write job: 5 (10 when the MERGE's data and delete files, the
-    // DELETE's delete file and the ledger row were each a Spark write)
-    jobs shouldBe 5
+    // held rows: bookkeeping, decode, dedup, side counts and writes all
+    // run on the driver; the same rows read from parquet add the
+    // batch's cache build, the bookkeeping aggregate's shuffle and
+    // result, and one collect of the slice's raw rows
+    for ((frame, pinned) <- Seq(batch -> 0, onDisk(batch) -> 4)) {
+      val (cat, ctx) = morBootstrap()
+      jobsOf(CdcPipeline.processBatch(frame, 1L, ctx)) shouldBe pinned
+      state(cat) shouldBe Seq((1, "a", 10.0), (2, "b2", 21.0), (4, "d", 40.0))
+    }
   }
 
   test("the ledger append writes its row on the driver: no Spark job") {
@@ -307,6 +318,51 @@ class CdcPipelineSpec extends SparkSpec {
     wm.getLong(wm.fieldIndex("min_offset")) shouldBe 0L
     wm.getLong(wm.fieldIndex("max_offset")) shouldBe over + 2L
     wm.getLong(wm.fieldIndex("batch_id")) shouldBe 4L
+  }
+
+  test("held and distributed batch frames land the same tables and ledger rows") {
+    import graft.store.LakeTable
+    val dbs = Seq("held", "spread")
+    val (cat, _) = bootstrap(dbs)
+    val ctxs = dbs.map { db =>
+      cat.table(s"svc_$db.tb_item").setProperties(Map(
+        "write.merge.mode" -> "merge-on-read",
+        "write.delete.mode" -> "merge-on-read"))
+      PipelineContext(cat, registry, s"dbz.$db.TB_ITEM", "dag1", "svc")
+    }
+    val ops = randomOps(new scala.util.Random(11), "eq")
+    def event(schemaId: Int, k: Int, op: String, name: String, amount: Double, off: Long) =
+      (1, schemaId, keyBytes(k), valueBytes(op, k, name, amount, 1600000000000L, 1700000000000L + off), off)
+    val over = LakeTable.MaxDeleteReachKeys + 1
+    val batches = Seq(
+      // the latest event's timestamp is null: the bound skips it
+      opsBatch(ops.take(30)).withColumn("timestamp",
+        when(col("offset") === ops(29)._5, lit(null)).otherwise(col("timestamp"))),
+      // two value schemas over the same keys: the newer merges last
+      batchDf(ops.slice(30, 60).map { case (k, op, name, amount, off) =>
+        event(if (off % 3 == 0) 3 else 2, k, op, name, amount, off) }),
+      batchDf(Nil),
+      // past the cap: both frames are persisted and the slice stays
+      // distributed
+      batchDf((0 until over).map(i =>
+        event(2, 1 + i % 40, if (i % 7 == 0) "d" else "u", s"L$i", i.toDouble, 2000L + i))))
+
+    val tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try batches.zipWithIndex.foreach { case (batch, bi) =>
+      CdcPipeline.processBatch(batch, bi.toLong, ctxs(0))
+      CdcPipeline.processBatch(onDisk(batch), bi.toLong, ctxs(1))
+    } finally spark.conf.set("spark.sql.session.timeZone", tz)
+
+    val tables = ctxs.map(c => cat.table(c.fullTableName).read.orderBy("id").collect().toSeq)
+    tables(0) should not be empty
+    tables(0) shouldBe tables(1)
+    val ledgers = ctxs.map(c => cat.table(Watermark.CdcTable).read
+      .filter(col("iceberg_schema") === c.icebergSchema)
+      .select("event_count", "min_offset", "max_offset", "max_event_ts", "batch_id")
+      .orderBy("batch_id").collect().toSeq)
+    ledgers(0).map(_.getLong(0)) shouldBe Seq(30L, 30L, 0L, over.toLong)
+    ledgers(0) shouldBe ledgers(1)
   }
 
   test("missing target table is skipped with no failure") {

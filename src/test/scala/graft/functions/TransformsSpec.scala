@@ -2,6 +2,7 @@ package graft.functions
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row, StoreWrite}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,22 +41,64 @@ class TransformsSpec extends SparkSpec {
     n shouldBe org.apache.commons.codec.digest.DigestUtils.md5Hex("x")
   }
 
+  /** `latestPerKey` over `df` held by the driver and distributed: the
+    * held input stays held, and both give the same rows. */
+  private def latestBothWays(df: DataFrame, keys: Seq[String], order: String,
+      tieBreak: Seq[String] = Nil): Seq[Row] = {
+    val outs = heldAndDistributed(df).map { case (how, in) =>
+      val out = Transforms.latestPerKey(in, keys, order, tieBreak)
+      withClue(how) { StoreWrite.local(out).isDefined shouldBe (how == "held") }
+      out.collect().toSeq.sortBy(_.toString)
+    }
+    outs.head shouldBe outs.last
+    outs.head
+  }
+
   test("latestPerKey: ties broken deterministically, multi-key partitions") {
     val df = Seq(
       (1L, "a", 10L, 100L), (1L, "a", 10L, 101L), // same orderCol → tieBreak
       (1L, "b", 5L, 1L), (2L, "a", 7L, 2L))
       .toDF("k1", "k2", "ord", "tie")
-    val out = Transforms.latestPerKey(df, Seq("k1", "k2"), "ord", Seq("tie"))
-      .orderBy("k1", "k2").collect()
+    val out = latestBothWays(df, Seq("k1", "k2"), "ord", Seq("tie"))
     out.length shouldBe 3
-    out(0).getLong(3) shouldBe 101L // highest tiebreak wins within the tie
+    out.find(r => r.getLong(0) == 1L && r.getString(1) == "a").get.getLong(3) shouldBe 101L
   }
 
   test("latestPerKey without tieBreak still keeps exactly one row per key") {
     val df = Seq((1L, 5L), (1L, 9L), (1L, 7L)).toDF("k", "ord")
-    val out = Transforms.latestPerKey(df, Seq("k"), "ord").collect()
+    val out = latestBothWays(df, Seq("k"), "ord")
     out.length shouldBe 1
     out(0).getLong(1) shouldBe 9L
+  }
+
+  test("latestPerKey: null order values sort last, a null tie falls to tieBreak") {
+    val df = Seq[(Long, Option[Long], Long)](
+      (1L, None, 1L), (1L, Some(5L), 2L), (1L, Some(3L), 3L),
+      (2L, None, 4L), (2L, None, 6L), (2L, None, 5L))
+      .toDF("k", "ord", "tie")
+    latestBothWays(df, Seq("k"), "ord", Seq("tie")).map(r => (r.getLong(0), r.getLong(2))) shouldBe
+      Seq((1L, 2L), (2L, 6L))
+  }
+
+  test("latestPerKey: a full tie without tieBreak keeps one of the tied rows") {
+    val df = Seq((1L, 5L, "a"), (1L, 5L, "b"), (1L, 4L, "c")).toDF("k", "ord", "v")
+    heldAndDistributed(df).foreach { case (how, in) =>
+      val out = Transforms.latestPerKey(in, Seq("k"), "ord").collect()
+      withClue(how) {
+        out.length shouldBe 1
+        Set("a", "b") should contain(out(0).getString(2))
+      }
+    }
+  }
+
+  test("latestPerKey groups NaN, -0.0 and null keys as Spark does; NaN orders highest") {
+    val df = Seq[(Option[Double], Double, Int)](
+      (Some(Double.NaN), 1.0, 1), (Some(java.lang.Double.longBitsToDouble(0x7ff8000000000123L)), 2.0, 2),
+      (Some(-0.0), 1.0, 3), (Some(0.0), 2.0, 4),
+      (None, 3.0, 5), (None, 1.0, 6),
+      (Some(1.0), 7.0, 7), (Some(1.0), Double.NaN, 8))
+      .toDF("k", "ord", "id")
+    latestBothWays(df, Seq("k"), "ord").map(_.getInt(2)).sorted shouldBe Seq(2, 4, 5, 8)
   }
 
   test("confluent expressions at boundary values") {

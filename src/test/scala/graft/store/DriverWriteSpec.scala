@@ -129,6 +129,30 @@ class DriverWriteSpec extends SparkSpec {
     StoreWrite.local(StoreWrite.collectLocal(spark.range(3).toDF())).map(_.rows.size) shouldBe Some(3)
   }
 
+  test("projections and filters over held rows give the rows the optimizer's fold gives") {
+    import org.apache.spark.sql.functions._
+    val frames = Seq(
+      local.select(col("id"), upper(col("name")).as("u"), (col("amount") * 2).as("a2"),
+        col("price").cast("string").as("p"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("t"),
+        struct(col("id"), col("name")).as("s"), when(col("flag"), lit("y")).as("f")),
+      local.filter(col("name").isNotNull && col("amount") >= 0).select("id", "name"),
+      local.withColumn("x", col("id") * 10).filter(col("x") > 10)
+        .withColumn("y", concat(col("name"), lit("!"))),
+      local.select(col("id"), monotonically_increasing_id().as("m"), rand(7).as("r")),
+      local.filter(lit(false)))
+    frames.foreach { df =>
+      val held = StoreWrite.local(df)
+      held.map(_.output.map(_.name)) shouldBe Some(df.columns.toSeq)
+      // collect runs the optimizer's own fold over the same rows
+      values(held.get.toDF) shouldBe values(df)
+    }
+    // rows a cached frame stands for are read from the cache, as before
+    val cached = local.select("id", "name").cache()
+    try StoreWrite.local(cached.filter("id > 1")) shouldBe None
+    finally cached.unpersist()
+  }
+
   test("driver-deduplicated delete keys load as Spark-deduplicated ones do") {
     val keySchema = StructType(Seq(StructField("k", DoubleType), StructField("s", StringType)))
     val keys = spark.createDataFrame(Seq(
